@@ -118,6 +118,84 @@ def stream_events(
     return reader.parquet(path)
 
 
+SCHEMA_SIDECAR = "_schema.json"  # leading _ ⇒ invisible to parquet scans
+
+
+def _write_schema_sidecar(df: DataFrame, path: str) -> None:
+    """Record the schema of the parquet dir ``df`` was just written to,
+    so readers can pass it to ``spark.read.schema`` instead of running
+    the one-task footer-inference job. Written after the parquet write
+    and before the store's commit point, so every committed dir has
+    one."""
+    tmp = os.path.join(path, SCHEMA_SIDECAR + ".tmp")
+    with open(tmp, "w") as fh:
+        fh.write(df.schema.json())
+    os.replace(tmp, os.path.join(path, SCHEMA_SIDECAR))
+
+
+def _read_store_parquet(
+    spark: SparkSession, dirs: Sequence[str], files: Sequence[str] | None = None
+) -> DataFrame:
+    """Read ``files`` (default: the ``dirs`` themselves) with the schema
+    the ``dirs``' sidecars recorded at write time — no inference job.
+    A dir without a sidecar (written before sidecars existed, or by
+    hand), or dirs whose sidecars disagree, fall back to plain
+    ``spark.read.parquet`` and its footer inference."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    recorded = set()
+    try:
+        for d in dirs:
+            with open(os.path.join(d, SCHEMA_SIDECAR)) as fh:
+                recorded.add(fh.read())
+    except OSError:
+        recorded.clear()
+    reader = spark.read
+    if len(recorded) == 1:
+        reader = reader.schema(StructType.fromJson(json.loads(recorded.pop())))
+    return reader.parquet(*(dirs if files is None else files))
+
+
+def _footer_key_stats(path: str, key: str) -> tuple[int, object, object]:
+    """(row count, min, max of column ``key``) of one parquet file, from
+    its footer alone — min/max folded over the row groups. min/max is
+    None when any row group holding a non-null key lacks usable stats
+    (INT96 timestamps carry none; decimal, binary and timestamp stats
+    do not decode into values that compare like the key after a JSON
+    round trip), which readers must treat as "may hold any key"."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    paths = [md.schema.column(i).path for i in range(md.num_columns)]
+    if key not in paths:
+        return md.num_rows, None, None
+    col = paths.index(key)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(col).statistics
+        if rg.num_rows == 0 or (
+            st is not None and st.has_null_count and st.null_count == rg.num_rows
+        ):
+            continue  # no non-null key here to cover
+        if st is None or not st.has_min_max:
+            return md.num_rows, None, None
+        try:
+            g_lo, g_hi = st.min, st.max
+        except pa.ArrowException:
+            return md.num_rows, None, None
+        if type(g_lo) not in (bool, int, float, str, datetime.date):
+            return md.num_rows, None, None
+        lo = g_lo if lo is None else min(lo, g_lo)
+        hi = g_hi if hi is None else max(hi, g_hi)
+    return md.num_rows, lo, hi
+
+
 class ParquetStateStore:
     """Versioned parquet snapshots + a CURRENT pointer file — the
     minimal transaction log that makes plain-parquet MERGE safe:
@@ -135,11 +213,20 @@ class ParquetStateStore:
     every snapshot is written as N range-partitioned files plus a
     ``_manifest.json`` recording each file's key range and row count
     (the Delta/Iceberg file-statistics shape, one level deep). The
-    manifest is written before the pointer flips, so a crash mid-write
-    can never expose a half-manifest snapshot; ``lookup()`` uses it to
-    prune to the one file covering a key instead of scanning the
-    snapshot. The foreachBatch MERGE bodies are unchanged — layout is
-    entirely the store's concern.
+    manifest is built from the written files' parquet footers (row
+    counts and per-row-group min/max, no Spark job) and written before
+    the pointer flips, so a crash mid-write can never expose a
+    half-manifest snapshot; ``lookup()`` uses it to prune to the one
+    file covering a key instead of scanning the snapshot. The
+    foreachBatch MERGE bodies are unchanged — layout is entirely the
+    store's concern.
+
+    **Schema sidecar**: every snapshot dir also holds a
+    ``_schema.json`` with the written frame's schema, which every read
+    (``current``, ``lookup``) passes to ``spark.read.schema`` so no
+    footer-inference job runs. Commit order: parquet files → sidecar →
+    manifest → pointer flip, so a committed snapshot always has its
+    sidecar (and, with ``range_key``, its manifest).
 
     **Single-writer contract**: one committing writer per root (the
     streaming checkpoint already serializes folds). ``flip`` re-reads
@@ -185,6 +272,17 @@ class ParquetStateStore:
         no-overwrite-while-reading rule and re-merge state."""
         return self.last_committed() == batch_id
 
+    def _pointed_dir(self) -> str | None:
+        """The snapshot dir CURRENT names, or None before the first
+        commit. A reader that needs several facts about the current
+        snapshot reads the pointer ONCE through this and derives them
+        all from the one dir, so a concurrent flip cannot mix versions."""
+        try:
+            with open(self._pointer) as fh:
+                return fh.read().strip()
+        except FileNotFoundError:
+            return None
+
     def last_committed(self) -> int | None:
         """Batch id of the snapshot CURRENT points at, or None before
         the first commit. Within one checkpoint's lifetime batch ids
@@ -193,10 +291,10 @@ class ParquetStateStore:
         re-delivery of the last batch AND any stale re-delivery, which
         matters for NON-idempotent merges (sums): an is_current check
         alone would let an older batch id through and double-apply."""
-        if not os.path.exists(self._pointer):
+        version_dir = self._pointed_dir()
+        if version_dir is None:
             return None
-        with open(self._pointer) as fh:
-            name = os.path.basename(fh.read().strip())
+        name = os.path.basename(version_dir)
         return int(name[1:]) if name.startswith("v") else None
 
     def current(
@@ -260,12 +358,13 @@ class ParquetStateStore:
                 return None
             older = self.current(spark, as_of_batch=since_batch)
             return newer.exceptAll(older)
+        if as_of_batch is None:
+            version_dir = self._pointed_dir()
+            if version_dir is None:
+                return None
+            return _read_store_parquet(spark, [version_dir])
         if not os.path.exists(self._pointer):
             return None
-        if as_of_batch is None:
-            with open(self._pointer) as fh:
-                version_dir = fh.read().strip()
-            return spark.read.parquet(version_dir)
         committed = self.last_committed()
         if committed is None:
             # CURRENT exists but is malformed (not a v-dir pointer):
@@ -305,24 +404,26 @@ class ParquetStateStore:
                 f"empty) — read the current state (as_of_batch=None) or "
                 f"rebuild from upstream inputs"
             )
-        return spark.read.parquet(self.version_dir(candidates[-1]))
+        return _read_store_parquet(spark, [self.version_dir(candidates[-1])])
 
     def write_snapshot(self, df: DataFrame, batch_id: int) -> str:
-        """Write the snapshot dir (+ manifest) WITHOUT flipping the
-        pointer. Split out from :meth:`commit` so a fold can overlap
-        this (the expensive Spark job) with other stores' commits and
-        still flip its completion-marker pointer strictly last. Safe
-        to run even if the fold later fails: the dir is keyed by
-        batch_id and a replay rewrites it idempotently; an unflipped
-        pointer keeps the previous version current."""
+        """Write the snapshot dir (+ schema sidecar, + manifest)
+        WITHOUT flipping the pointer. Split out from :meth:`commit` so
+        a fold can overlap this (the expensive Spark job) with other
+        stores' commits and still flip its completion-marker pointer
+        strictly last. Safe to run even if the fold later fails: the
+        dir is keyed by batch_id and a replay rewrites it
+        idempotently; an unflipped pointer keeps the previous version
+        current."""
         version_dir = self.version_dir(batch_id)
         if self.range_key is not None:
             df = df.repartitionByRange(self.n_files, F.col(self.range_key))
         elif self.write_partitions is not None:
             df = df.coalesce(self.write_partitions)
         df.write.mode("overwrite").parquet(version_dir)
+        _write_schema_sidecar(df, version_dir)
         if self.range_key is not None:
-            self._write_manifest(df.sparkSession, version_dir, batch_id)
+            self._write_manifest(version_dir, batch_id)
         return version_dir
 
     def flip(self, batch_id: int) -> None:
@@ -434,76 +535,72 @@ class ParquetStateStore:
 
     # ------------------------------------------------------ manifest
 
-    def _write_manifest(
-        self, spark: SparkSession, version_dir: str, batch_id: int
-    ) -> None:
-        """One pass over the freshly-written snapshot collects per-file
-        (row count, min/max of the range key) — the same statistics an
-        Iceberg manifest carries. Small output: n_files rows."""
+    def _write_manifest(self, version_dir: str, batch_id: int) -> None:
+        """Per-file (row count, min/max of the range key) — the same
+        statistics an Iceberg manifest carries — read from the parquet
+        footers of the files just written, so building it launches no
+        Spark job. Zero-row files are left out (they cannot hold a
+        key); a file whose footer has no usable min/max for the key
+        (e.g. INT96 timestamps) records None for both, which
+        ``lookup()`` reads as "may hold any key". Written after the
+        schema sidecar and before the pointer flip."""
         import json
 
-        key = self.range_key
-        stats = (
-            spark.read.parquet(version_dir)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min(key).alias("min_key"),
-                F.max(key).alias("max_key"),
+        files = []
+        for name in sorted(os.listdir(version_dir)):
+            if name.startswith(("_", ".")):
+                continue  # Spark's own rule for what a scan reads
+            n_rows, lo, hi = _footer_key_stats(
+                os.path.join(version_dir, name), self.range_key
             )
-            .collect()
-        )
+            if n_rows:
+                files.append(
+                    {"file": name, "n_rows": n_rows, "min_key": lo, "max_key": hi}
+                )
         manifest = {
             "batch_id": batch_id,
-            "range_key": key,
-            "n_rows": int(sum(r["n_rows"] for r in stats)),
-            "files": sorted(
-                (
-                    {
-                        "file": os.path.basename(r["file"]),
-                        "n_rows": int(r["n_rows"]),
-                        "min_key": r["min_key"],
-                        "max_key": r["max_key"],
-                    }
-                    for r in stats
-                ),
-                key=lambda f: f["file"],
-            ),
+            "range_key": self.range_key,
+            "n_rows": sum(f["n_rows"] for f in files),
+            "files": files,
         }
         tmp = os.path.join(version_dir, self.MANIFEST + ".tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, default=str)
         os.replace(tmp, os.path.join(version_dir, self.MANIFEST))
 
+    def _manifest_at(self, version_dir: str | None) -> dict | None:
+        import json
+
+        if version_dir is None:
+            return None
+        try:
+            with open(os.path.join(version_dir, self.MANIFEST)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
+
     def manifest(self) -> dict | None:
         """Manifest of the CURRENT snapshot (None for unpartitioned
         stores or before the first commit)."""
-        import json
-
-        if not os.path.exists(self._pointer):
-            return None
-        with open(self._pointer) as fh:
-            version_dir = fh.read().strip()
-        path = os.path.join(version_dir, self.MANIFEST)
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            return json.load(fh)
+        return self._manifest_at(self._pointed_dir())
 
     def lookup(self, spark: SparkSession, value) -> DataFrame | None:
         """Point-read by range key through the manifest: open ONLY the
         file(s) whose [min_key, max_key] covers ``value`` — at a
         billion state rows this touches one file, not the snapshot.
-        Requires a ``range_key`` store with at least one commit."""
-        man = self.manifest()
+        A file whose manifest entry has no min/max is always read.
+        Requires a ``range_key`` store with at least one commit.
+
+        CURRENT is read once: the manifest and the files come from the
+        same snapshot dir even if a commit flips the pointer meanwhile."""
+        version_dir = self._pointed_dir()
+        man = self._manifest_at(version_dir)
         if man is None:
             raise ValueError("lookup() needs a range_key store with a commit")
-        with open(self._pointer) as fh:
-            version_dir = fh.read().strip()
 
         def covers(lo, hi) -> bool:
-            if lo is None:
-                return False
+            if lo is None or hi is None:
+                return True  # no footer stats: the file may hold the key
             try:
                 return lo <= value <= hi  # native order (ints stay ints in JSON)
             except TypeError:
@@ -515,8 +612,10 @@ class ParquetStateStore:
             if covers(f["min_key"], f["max_key"])
         ]
         if not paths:
-            return self.current(spark).filter(F.lit(False))
-        return spark.read.parquet(*paths).filter(F.col(man["range_key"]) == value)
+            return _read_store_parquet(spark, [version_dir]).filter(F.lit(False))
+        return _read_store_parquet(spark, [version_dir], paths).filter(
+            F.col(man["range_key"]) == value
+        )
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -558,7 +657,9 @@ class ParquetAppendLog:
     file. Crash semantics: a segment written without its manifest
     update is invisible (replay rewrites the same dir idempotently);
     ``last_committed`` serves the same high-water replay guard as the
-    snapshot store.
+    snapshot store. Every segment dir (appended, compacted or
+    rewritten) also gets the snapshot store's ``_schema.json`` sidecar
+    before the manifest swap, and ``current()`` reads with it.
 
     ``compact()`` is the offline OPTIMIZE: merge all active segments
     into one, swap the manifest atomically, then garbage-collect the
@@ -637,9 +738,13 @@ class ParquetAppendLog:
         return man["last_committed"] if man else None
 
     def _write_segment(self, df: DataFrame, dirname: str) -> None:
+        """Write one segment dir and its schema sidecar; the caller's
+        manifest swap (the commit point) comes after both."""
         if self.write_partitions is not None:
             df = df.coalesce(self.write_partitions)
-        df.write.mode("overwrite").parquet(os.path.join(self.root, dirname))
+        path = os.path.join(self.root, dirname)
+        df.write.mode("overwrite").parquet(path)
+        _write_schema_sidecar(df, path)
 
     def append(self, df: DataFrame, batch_id: int) -> None:
         self.write_segment(df, batch_id)
@@ -773,8 +878,8 @@ class ParquetAppendLog:
                     )
             if not names:
                 return None
-        return spark.read.parquet(
-            *(os.path.join(self.root, s) for s in names)
+        return _read_store_parquet(
+            spark, [os.path.join(self.root, s) for s in names]
         )
 
     def compact(self, spark: SparkSession, transform=None) -> None:
@@ -867,7 +972,7 @@ class ParquetAppendLog:
             lo, hi = self._range(man, s)
             name = f"rw{lo:010d}_{hi:010d}g{gen}i{i}"
             df = transform(
-                spark.read.parquet(os.path.join(self.root, s))
+                _read_store_parquet(spark, [os.path.join(self.root, s)])
             )
             self._write_segment(df, name)
             return name, [lo, hi]

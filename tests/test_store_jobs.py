@@ -1,0 +1,170 @@
+"""The parquet stores answer from what they wrote down, not from Spark:
+reads pass the schema sidecar to ``spark.read.schema`` (no inference
+job) and the range-store manifest comes from the parquet footers (no
+re-scan of the snapshot). Each operation runs under its own job group
+and its jobs are counted through the status tracker."""
+
+import json
+import os
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.readwriter import DataStreamWriter
+from pyspark.sql.types import StructType
+
+from dwh_spark.sources.catalog import load_table
+from dwh_spark.streaming.ingest import (
+    SCHEMA_SIDECAR,
+    ParquetAppendLog,
+    ParquetStateStore,
+    run_incremental_compaction,
+    run_incremental_rollup,
+    stream_events,
+)
+
+
+def _n_jobs(spark, group: str) -> int:
+    sc = spark.sparkContext
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _under_group(spark, group: str, fn):
+    """Run ``fn`` with its jobs tagged ``group``; return (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, _n_jobs(spark, group)
+
+
+@pytest.fixture
+def stream_groups(monkeypatch):
+    """A streaming query runs its foreachBatch jobs under its own job
+    group, the query's run id; record the run id of every query started."""
+    run_ids = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        run_ids.append(str(q.runId))
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return run_ids
+
+
+def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
+    spark, sf_dir, tmp_path, stream_groups
+):
+    events = load_table(spark, sf_dir, "events")
+    inbox = str(tmp_path / "inbox")
+    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(inbox)
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=4)
+    rollup = ParquetStateStore(str(tmp_path / "rollup"), write_partitions=1)
+    log = ParquetAppendLog(str(tmp_path / "log"), write_partitions=1)
+
+    def fold():
+        run_incremental_compaction(
+            stream_events(spark, inbox, events.schema), state,
+            str(tmp_path / "ckpt_fold"), ["user_id"], F.struct("ts", "event_id"),
+        )
+
+    def roll():
+        deltas = stream_events(spark, inbox, events.schema).select(
+            "event_type", F.col("value").cast("decimal(18,2)").alias("v")
+        )
+        run_incremental_rollup(
+            deltas, rollup, str(tmp_path / "ckpt_rollup"), ["event_type"],
+            {"n": F.count("*"), "sum_dec": F.sum("v")},
+        )
+
+    fold()  # first batch: both stores start empty
+    roll()
+    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(inbox)
+    fold()  # second batch merges into committed state
+    roll()
+    fold_jobs, rollup_jobs = (_n_jobs(spark, g) for g in stream_groups[2:])
+    # measured with sidecar reads and footer manifests (Spark 4.1,
+    # 8 shuffle partitions): a store read's inference job or the
+    # manifest's re-scan would add to these
+    assert fold_jobs <= 5, fold_jobs
+    assert rollup_jobs <= 3, rollup_jobs
+
+    log.append(events, 0)
+    key = state.manifest()["files"][0]["min_key"]
+    n_users = events.select("user_id").distinct().count()
+    for name, build, n_rows in [
+        ("state.current", lambda: state.current(spark), n_users),
+        ("state.as_of", lambda: state.current(spark, as_of_batch=0), None),
+        ("state.delta", lambda: state.current(spark, as_of_batch=1, since_batch=0), None),
+        ("state.lookup", lambda: state.lookup(spark, key), 1),
+        ("rollup.current", lambda: rollup.current(spark), None),
+        ("log.current", lambda: log.current(spark), events.count()),
+    ]:
+        frame, jobs = _under_group(spark, f"build {name}", build)
+        assert jobs == 0, f"{name}: {jobs} jobs before any action"
+        got = frame.count()
+        assert n_rows is None or got == n_rows, (name, got, n_rows)
+
+    # a range-store commit costs exactly the jobs of its parquet write
+    merged = state.current(spark).cache()
+    merged.count()
+    _, write_jobs = _under_group(
+        spark, "plain write",
+        lambda: merged.repartitionByRange(4, F.col("user_id")).write.parquet(
+            str(tmp_path / "plain")
+        ),
+    )
+    _, commit_jobs = _under_group(spark, "commit", lambda: state.commit(merged, 9))
+    merged.unpersist()
+    assert commit_jobs == write_jobs
+
+
+def test_sidecar_less_dirs_still_read(spark, tmp_path):
+    """Dirs written before sidecars existed (or by hand) fall back to
+    footer inference and read the same rows."""
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="k", n_files=2)
+    log = ParquetAppendLog(str(tmp_path / "log"))
+    df = spark.range(50).select(F.col("id").alias("k"), F.col("id").cast("string").alias("s"))
+    state.commit(df, 0)
+    log.append(df, 0)
+    want = sorted(df.collect())
+    for d in (state.version_dir(0), log.segment_dir(0)):
+        os.remove(os.path.join(d, SCHEMA_SIDECAR))
+    assert sorted(state.current(spark).collect()) == want
+    assert sorted(log.current(spark).collect()) == want
+    assert [tuple(r) for r in state.lookup(spark, 7).collect()] == [(7, "7")]
+
+
+def test_every_committed_dir_has_its_schema_sidecar(spark, tmp_path):
+    """Snapshots, appended segments and the dirs compact() and
+    rewrite_each() write all carry the sidecar with the written schema."""
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="x", n_files=2)
+    log = ParquetAppendLog(str(tmp_path / "log"))
+    for b in range(3):
+        df = spark.range(b * 10, b * 10 + 10).withColumnRenamed("id", "x")
+        state.commit(df, b)
+        log.append(df, b)
+
+    def has_sidecar(d):
+        """The sidecar exists and gives the schema footer inference does."""
+        with open(os.path.join(d, SCHEMA_SIDECAR)) as fh:
+            recorded = StructType.fromJson(json.load(fh))
+        return (
+            spark.read.schema(recorded).parquet(d).schema
+            == spark.read.parquet(d).schema
+        )
+
+    assert all(has_sidecar(state.version_dir(b)) for b in range(3))
+    log.compact(spark)
+    assert has_sidecar(os.path.join(log.root, log._read_manifest()["segments"][0]))
+    log.rewrite_each(spark, lambda seg: seg.filter(F.col("x") % 2 == 0))
+    segments = log._read_manifest()["segments"]
+    assert segments and all(has_sidecar(os.path.join(log.root, s)) for s in segments)
+    assert sorted(r["x"] for r in log.current(spark).collect()) == list(range(0, 30, 2))

@@ -390,6 +390,18 @@ def test_partitioned_store_manifest_and_restart(spark, tmp_path):
 
     man2 = store.manifest()
     assert man2["batch_id"] > man1["batch_id"]
+    # the footer-built manifest equals the per-file stats a Spark scan
+    # of the same snapshot computes
+    ref = (
+        spark.read.parquet(store.version_dir(man2["batch_id"]))
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(F.count(F.lit(1)).alias("n"), F.min("user_id").alias("lo"),
+             F.max("user_id").alias("hi"))
+        .collect()
+    )
+    assert sorted(
+        (os.path.basename(r["file"]), r["n"], r["lo"], r["hi"]) for r in ref
+    ) == [(f["file"], f["n_rows"], f["min_key"], f["max_key"]) for f in man2["files"]]
     state = store.current(spark)
     # manifest row counts must reconcile exactly with the snapshot
     assert man2["n_rows"] == state.count()
@@ -435,6 +447,51 @@ def test_partitioned_store_lookup_prunes_files(spark, tmp_path):
         assert n_covering < len(man["files"])
     # a key outside every range returns empty, not an error
     assert store.lookup(spark, max(state) + 10**9).count() == 0
+
+
+def test_partitioned_store_key_without_footer_stats(spark, tmp_path):
+    """A range key whose parquet footers carry no min/max (INT96
+    timestamps) records None in the manifest, and lookup() reads
+    those files instead of pruning them: a scan, never a wrong answer."""
+    events = load_table(spark, SF, "events")
+    store = ParquetStateStore(str(tmp_path / "state"), range_key="ts", n_files=4)
+    store.commit(events, 0)
+    man = store.manifest()
+    assert len(man["files"]) > 1
+    assert all(f["min_key"] is None and f["max_key"] is None for f in man["files"])
+    assert sum(f["n_rows"] for f in man["files"]) == events.count()
+    for row in events.orderBy("event_id").limit(3).collect():
+        got = sorted(r["event_id"] for r in store.lookup(spark, row["ts"]).collect())
+        want = sorted(
+            r["event_id"] for r in events.filter(F.col("ts") == row["ts"]).collect()
+        )
+        assert row["event_id"] in got and got == want
+
+
+def test_lookup_reads_current_once(spark, tmp_path, monkeypatch):
+    """A commit landing while lookup() is resolving the snapshot must not
+    join one version's manifest file names to another version's dir:
+    lookup() serves the version CURRENT named when it started."""
+    store = ParquetStateStore(str(tmp_path / "state"), range_key="k", n_files=2)
+
+    def frame(v):
+        return spark.range(100).select(F.col("id").alias("k"), F.lit(v).alias("v"))
+
+    store.commit(frame(1), 1)
+    store.write_snapshot(frame(2), 2)
+
+    load = store._manifest_at  # every manifest read, manifest() included
+
+    def load_then_commit(version_dir):
+        out = load(version_dir)
+        store.flip(2)  # the concurrent commit
+        return out
+
+    monkeypatch.setattr(store, "_manifest_at", load_then_commit)
+    assert [tuple(r) for r in store.lookup(spark, 42).collect()] == [(42, 1)]
+    monkeypatch.undo()
+    assert store.last_committed() == 2
+    assert [tuple(r) for r in store.lookup(spark, 42).collect()] == [(42, 2)]
 
 
 def test_minhash_ingest_exactly_once_under_lost_checkpoint(spark, tmp_path):
