@@ -77,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.operators.caps import calibrate_cap
-from dwh_spark.streaming.ingest import ParquetAppendLog
+from dwh_spark.streaming.ingest import ParquetAppendLog, _read_store_parquet
 
 
 @dataclass
@@ -565,8 +565,8 @@ def run_fp_maintenance_window(
             # the expiring segments — materialize them once (bounded
             # by the window's retention cadence, exactly the rows
             # about to drop)
-            dropped = spark.read.parquet(
-                *(_os.path.join(index_store.root, s) for s in drop)
+            dropped = _read_store_parquet(
+                spark, [_os.path.join(index_store.root, s) for s in drop]
             ).localCheckpoint()
             drop_partials = partials_fn(dropped).localCheckpoint()
             rows_expired = int(dropped.count())
@@ -822,8 +822,8 @@ def run_two_store_window(
         rows = -1
         if report_counts:
             rows = int(
-                spark.read.parquet(
-                    *(_os.path.join(store.root, s) for s in drop)
+                _read_store_parquet(
+                    spark, [_os.path.join(store.root, s) for s in drop]
                 ).count()
             )
         store.expire(expire_keep_from)

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from dwh_spark.multimodal.audio_fp import AUDIO_FP_BITS, audio_fp_frame
 from dwh_spark.multimodal.perceptual import DHASH_BITS, dhash_frame
 from dwh_spark.operators.dedup import simhash_blocked_pairs, simhash_blocked_probe
-from dwh_spark.streaming.ingest import ParquetAppendLog
+from dwh_spark.streaming.ingest import ParquetAppendLog, _read_store_parquet
 
 
 def _run_indexed_ingest(
@@ -576,7 +576,9 @@ class WordDfCapMaintenance:
         lc = self.stats_store.last_committed()
         if lc is not None and batch_id <= lc:
             return  # replay guard, same discipline as the fold's
-        seg = self.spark.read.parquet(self.index_store.segment_dir(batch_id))
+        seg = _read_store_parquet(
+            self.spark, [self.index_store.segment_dir(batch_id)]
+        )
         counts = seg.groupBy(self.value_col).agg(F.count("*").alias("df"))
         self.stats_store.append(counts, batch_id)
 
@@ -846,7 +848,9 @@ class BlockDfCapMaintenance:
         lc = self.stats_store.last_committed()
         if lc is not None and batch_id <= lc:
             return
-        seg = self.spark.read.parquet(self.index_store.segment_dir(batch_id))
+        seg = _read_store_parquet(
+            self.spark, [self.index_store.segment_dir(batch_id)]
+        )
         self.stats_store.append(
             video_block_df(seg, n_blocks=self.n_blocks), batch_id
         )

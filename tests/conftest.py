@@ -58,3 +58,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+def n_jobs(spark, group: str) -> int:
+    """Spark jobs launched so far under job group ``group``."""
+    sc = spark.sparkContext
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def under_group(spark, group: str, fn):
+    """Run ``fn`` with its jobs tagged ``group``; return (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, n_jobs(spark, group)

@@ -17,28 +17,14 @@ from dwh_spark.streaming.ingest import (
     SCHEMA_SIDECAR,
     ParquetAppendLog,
     ParquetStateStore,
+    _read_store_parquet,
     run_incremental_compaction,
     run_incremental_rollup,
     stream_events,
 )
+from dwh_spark.streaming.phash_ingest import WordDfCapMaintenance
 
-
-def _n_jobs(spark, group: str) -> int:
-    sc = spark.sparkContext
-    # the status tracker is fed by the listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def _under_group(spark, group: str, fn):
-    """Run ``fn`` with its jobs tagged ``group``; return (result, jobs)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, _n_jobs(spark, group)
+from tests.conftest import n_jobs, under_group
 
 
 @pytest.fixture
@@ -89,7 +75,7 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
     ).parquet(inbox)
     fold()  # second batch merges into committed state
     roll()
-    fold_jobs, rollup_jobs = (_n_jobs(spark, g) for g in stream_groups[2:])
+    fold_jobs, rollup_jobs = (n_jobs(spark, g) for g in stream_groups[2:])
     # measured with sidecar reads and footer manifests (Spark 4.1,
     # 8 shuffle partitions): a store read's inference job or the
     # manifest's re-scan would add to these
@@ -107,7 +93,7 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
         ("rollup.current", lambda: rollup.current(spark), None),
         ("log.current", lambda: log.current(spark), events.count()),
     ]:
-        frame, jobs = _under_group(spark, f"build {name}", build)
+        frame, jobs = under_group(spark, f"build {name}", build)
         assert jobs == 0, f"{name}: {jobs} jobs before any action"
         got = frame.count()
         assert n_rows is None or got == n_rows, (name, got, n_rows)
@@ -115,13 +101,13 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
     # a range-store commit costs exactly the jobs of its parquet write
     merged = state.current(spark).cache()
     merged.count()
-    _, write_jobs = _under_group(
+    _, write_jobs = under_group(
         spark, "plain write",
         lambda: merged.repartitionByRange(4, F.col("user_id")).write.parquet(
             str(tmp_path / "plain")
         ),
     )
-    _, commit_jobs = _under_group(spark, "commit", lambda: state.commit(merged, 9))
+    _, commit_jobs = under_group(spark, "commit", lambda: state.commit(merged, 9))
     merged.unpersist()
     assert commit_jobs == write_jobs
 
@@ -168,3 +154,25 @@ def test_every_committed_dir_has_its_schema_sidecar(spark, tmp_path):
     segments = log._read_manifest()["segments"]
     assert segments and all(has_sidecar(os.path.join(log.root, s)) for s in segments)
     assert sorted(r["x"] for r in log.current(spark).collect()) == list(range(0, 30, 2))
+
+
+def test_df_cap_record_reads_its_segment_without_jobs(spark, tmp_path):
+    """``WordDfCapMaintenance.record`` reads the just-appended index
+    segment through its sidecar, so it launches only the jobs of its
+    stats append — the same as appending the same counts to a fresh log."""
+    index = ParquetAppendLog(str(tmp_path / "index"), write_partitions=1)
+    stats = ParquetAppendLog(str(tmp_path / "stats"), write_partitions=1)
+    maint = WordDfCapMaintenance(spark, index, stats, max_word_freq=10)
+    index.append(
+        spark.range(200).select((F.col("id") % 17).alias("sub32"), F.col("id").alias("pos")), 0
+    )
+    seg, read_jobs = under_group(
+        spark, "segment read", lambda: _read_store_parquet(spark, [index.segment_dir(0)])
+    )
+    assert read_jobs == 0
+    counts = seg.groupBy("sub32").agg(F.count("*").alias("df"))
+    plain = ParquetAppendLog(str(tmp_path / "plain"), write_partitions=1)
+    _, append_jobs = under_group(spark, "plain append", lambda: plain.append(counts, 0))
+    _, record_jobs = under_group(spark, "record", lambda: maint.record(0))
+    assert record_jobs == append_jobs
+    assert sorted(stats.current(spark).collect()) == sorted(counts.collect())
