@@ -10,10 +10,9 @@ computing unreferenced aggregate expressions entirely, silently
 under-measuring (e.g. q1's decimal sums would never run).
 
 By default (opt out with ``SPARK_GRAFT_BENCH_RECHECK=0``) every query
-whose in-run timing exceeds 2x its recorded floor (the per-query
-minimum across committed BENCH_r*.json files) is re-run once, isolated
-and warm, at the end; both numbers land in the JSON line under
-``rechecked``. This separates real plan regressions from the
+whose in-run timing exceeds 2x its recorded floor (BENCH_FLOORS.json)
+is re-run once, isolated and warm, at the end; both numbers land in the
+JSON line under ``rechecked``. This separates real plan regressions from the
 documented session-level GC/background spikes (up to ~4.9x) on this
 host. Default-on so the driver's committed BENCH_r{N}.json always
 carries adjudicated numbers (VERDICT r6 item 3).
@@ -51,72 +50,25 @@ _RECHECK_THRESHOLD = {
 
 
 def _recorded_floors() -> dict[str, float]:
-    """Per-query minimum seconds across committed BENCH_r*.json files.
-
-    The driver wraps bench stdout as {"tail": "<last ~2KB>", ...} —
-    truncation drops the JSON head, so the tail is scraped with a
-    regex for '"name": seconds' pairs (our ascending-cost ordering
-    deliberately keeps the expensive queries in the surviving tail).
-    A raw bench JSON line with a "queries" map is also accepted.
-    Scraped names are restricted to registered query names so stray
-    numeric pairs (summary fields, doc tables) can never register as
-    floors (ADVICE r6).
-    """
-    import glob
-    import re
-
+    """Per-query floor seconds from BENCH_FLOORS.json (``_comment`` and
+    any other non-numeric entry are skipped). A missing file means no
+    floors; an unparseable one is reported on stderr and also yields
+    none."""
     here = os.path.dirname(os.path.abspath(__file__))
-    floors: dict[str, float] = {}
-
-    def take(name: str, val: float) -> None:
-        if name in known:
-            floors[name] = min(floors.get(name, float("inf")), val)
-
-    known = set(QUERIES)
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        if path.endswith("BENCH_r01.json"):
-            continue  # r1 used count(), which under-measures (see above)
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, val in (rec.get("queries") or {}).items():
-            if isinstance(val, (int, float)):
-                take(name, float(val))
-        for name, num in re.findall(
-            r'\\?"(\w+)\\?":\s*([0-9]+\.[0-9]+)', rec.get("tail") or ""
-        ):
-            take(name, float(num))
-    # BASELINE.md's per-query table holds the cleanest recorded columns
-    # (rows like `| name | 1.05 | 0.86 | 1.28 |`, `—` for absent)
-    try:
-        with open(os.path.join(here, "BASELINE.md")) as fh:
-            for m in re.finditer(
-                r"^\|\s*(\w+)\s*\|([^|\n]*)\|([^|\n]*)\|([^|\n]*)\|", fh.read(), re.M
-            ):
-                for cell in m.groups()[1:]:
-                    cell = cell.strip()
-                    if re.fullmatch(r"[0-9]+\.[0-9]+", cell):
-                        take(m.group(1), float(cell))
-    except OSError:
-        pass
-    # BENCH_FLOORS.json REPLACES scraped floors: a query whose change
-    # legitimately added work (re-baselined in BASELINE.md) must not
-    # false-positive against its all-time minimum forever
     try:
         with open(os.path.join(here, "BENCH_FLOORS.json")) as fh:
-            for name, val in json.load(fh).items():
-                if isinstance(val, (int, float)):
-                    floors[name] = float(val)
+            rows = json.load(fh)
     except OSError:
-        pass  # overrides file legitimately absent
+        return {}
     except json.JSONDecodeError as exc:
-        # a present-but-broken overrides file must not silently revert
-        # re-baselined queries to stale floors
-        print(f"# WARNING: BENCH_FLOORS.json unparseable, overrides "
-              f"dropped: {exc}", file=sys.stderr)
-    return floors
+        print(f"# WARNING: BENCH_FLOORS.json unparseable, no floors: {exc}",
+              file=sys.stderr)
+        return {}
+    return {
+        name: float(val)
+        for name, val in rows.items()
+        if isinstance(val, (int, float))
+    }
 
 
 def main() -> None:

@@ -31,6 +31,7 @@ from dwh_spark.multimodal.av import (
     wav_bytes,
 )
 from dwh_spark.plans.registry import query
+from dwh_spark.session import persist_slot, scratch_dir
 from dwh_spark.sources.catalog import load_table
 
 _RATES = (8000, 16000, 22050, 44100, 48000)
@@ -1824,29 +1825,13 @@ def av_video_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# live persisted fingerprint frames for the capped queries: each
-# frame feeds BOTH the stats build and the probe — without the
-# persist the fixture corpus would be decoded twice (same rotation
-# discipline as plans/images.py:_IMGS_CORPUS_CACHE, including its
-# pop-BEFORE-persist ordering). KEYED per family (audio|video) since
-# r19: cross-family pops were the ONLY ordering dependency between
-# the audio and video arms, forcing the capstone pools
-# (pipeline_extra.py) to chain them inside one worker — keyed slots
-# let the two arms materialize concurrently while storage stays
-# bounded at one live fixture per family, rotated on every family
-# query (and the session's concurrent periodic GC reclaims dropped
-# blocks).
-_AV_CAPPED_CACHE: dict[str, list] = {}
-
-
-def _drop_av_slot(cache: dict, family: str) -> None:
-    """Pop-BEFORE-persist half of the keyed rotation: unpersist the
-    family's previous fixture frames before the caller persists its
-    new ones. Each family's queries run serially (the capstone pools
-    never run two queries of ONE family concurrently), so slot
-    mutation needs no lock."""
-    for df in cache.pop(family, []):
-        df.unpersist()
+# The AV queries keep their persisted fixture frames in the slots
+# "av.capped.<family>" and "av.corpus.<family>" (persist_slot): each
+# frame feeds BOTH the stats build and the probe — without the persist
+# the fixture corpus would be decoded twice. One slot per family
+# (audio|video), so the capstone pools (pipeline_extra.py) materialize
+# the two arms concurrently while storage stays bounded at one live
+# fixture per family and slot.
 
 
 def _audio_silence_offset_fixture(docs, base: bool, variants: bool):
@@ -2002,13 +1987,13 @@ def av_audio_fp_offset_capped_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         .repartition(32)
     )
     # the subfp frame feeds attach_subfp_df's groupBy AND its join —
-    # persist so the WAV corpus is decoded once, not twice (ADVICE
-    # r13; same rotation discipline as the video twin above)
-    _drop_av_slot(_AV_CAPPED_CACHE, "audio")
-    subfps = audio_subfingerprint_frame(
-        _audio_silence_offset_fixture(docs, base=True, variants=False)
-    ).persist()
-    _AV_CAPPED_CACHE["audio"] = [subfps]
+    # persist so the WAV corpus is decoded once, not twice (ADVICE r13)
+    subfps = persist_slot(
+        "av.capped.audio",
+        lambda: audio_subfingerprint_frame(
+            _audio_silence_offset_fixture(docs, base=True, variants=False)
+        ),
+    )
     index = attach_subfp_df(subfps)
     batch = _audio_silence_offset_fixture(docs, base=False, variants=True)
     matches = audio_offset_incremental_ingest(
@@ -2204,11 +2189,12 @@ def av_video_phash_offset_capped_ingest(
         .select("doc_id")
         .repartition(32)
     )
-    _drop_av_slot(_AV_CAPPED_CACHE, "video")
-    index = video_dhash_frames(
-        _video_black_offset_fixture(docs, base=True, variants=False)
-    ).persist()
-    _AV_CAPPED_CACHE["video"] = [index]
+    index = persist_slot(
+        "av.capped.video",
+        lambda: video_dhash_frames(
+            _video_black_offset_fixture(docs, base=True, variants=False)
+        ),
+    )
     stats = video_block_df(index)
     batch = _video_black_offset_fixture(docs, base=False, variants=True)
     matches = video_offset_vote_probe(
@@ -2372,10 +2358,6 @@ def _audio_feature_frame(audio):
         "words array<long>",
     )
 
-
-# live persisted audio/video feature frames (same KEYED rotation
-# discipline as _AV_CAPPED_CACHE above)
-_AV_CORPUS_CACHE: dict[str, list] = {}
 
 _AV_AUDIO_CORPUS_ORACLE_BODY = """
     eb AS (
@@ -2560,9 +2542,9 @@ def av_audio_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    _drop_av_slot(_AV_CORPUS_CACHE, "audio")
-    feats = _audio_feature_frame(_audio_corpus_fixture(docs)).persist()
-    _AV_CORPUS_CACHE["audio"] = [feats]
+    feats = persist_slot(
+        "av.corpus.audio", lambda: _audio_feature_frame(_audio_corpus_fixture(docs))
+    )
 
     qual = feats.filter(F.col("ok") & (F.col("n_lv") > 1))
     canon = qual.groupBy("bmd5").agg(F.min("audio_id").alias("audio_id"))
@@ -2742,14 +2724,17 @@ def av_audio_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id")
         .repartition(32)
     )
-    _drop_av_slot(_AV_CORPUS_CACHE, "audio")
-    corpus_feats = _audio_feature_frame(
-        _audio_corpus_fixture(docs, base=True, variants=False)
-    ).persist()
-    batch_feats = _audio_feature_frame(
-        _audio_corpus_fixture(docs, base=False, variants=True, novel=True)
-    ).persist()
-    _AV_CORPUS_CACHE["audio"] = [corpus_feats, batch_feats]
+    corpus_feats, batch_feats = persist_slot(
+        "av.corpus.audio",
+        lambda: (
+            _audio_feature_frame(
+                _audio_corpus_fixture(docs, base=True, variants=False)
+            ),
+            _audio_feature_frame(
+                _audio_corpus_fixture(docs, base=False, variants=True, novel=True)
+            ),
+        ),
+    )
 
     qual = batch_feats.filter(F.col("ok") & (F.col("n_lv") > 1))
     batch_hashes = qual.select("bmd5").distinct()
@@ -3112,9 +3097,9 @@ def av_video_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    _drop_av_slot(_AV_CORPUS_CACHE, "video")
-    feats = _video_feature_frame(_video_corpus_fixture(docs)).persist()
-    _AV_CORPUS_CACHE["video"] = [feats]
+    feats = persist_slot(
+        "av.corpus.video", lambda: _video_feature_frame(_video_corpus_fixture(docs))
+    )
 
     qual = feats.filter(F.col("ok") & (F.col("contrast") > 0))
     canon = qual.groupBy("bmd5").agg(F.min("video_id").alias("video_id"))
@@ -3282,14 +3267,17 @@ def av_video_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id")
         .repartition(32)
     )
-    _drop_av_slot(_AV_CORPUS_CACHE, "video")
-    corpus_feats = _video_feature_frame(
-        _video_corpus_fixture(docs, base=True, variants=False)
-    ).persist()
-    batch_feats = _video_feature_frame(
-        _video_corpus_fixture(docs, base=False, variants=True, novel=True)
-    ).persist()
-    _AV_CORPUS_CACHE["video"] = [corpus_feats, batch_feats]
+    corpus_feats, batch_feats = persist_slot(
+        "av.corpus.video",
+        lambda: (
+            _video_feature_frame(
+                _video_corpus_fixture(docs, base=True, variants=False)
+            ),
+            _video_feature_frame(
+                _video_corpus_fixture(docs, base=False, variants=True, novel=True)
+            ),
+        ),
+    )
 
     qual = batch_feats.filter(F.col("ok") & (F.col("contrast") > 0))
     batch_hashes = qual.select("bmd5").distinct()
@@ -3739,11 +3727,12 @@ def av_audio_offset_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one decode pass feeds the df attach (groupBy + join), the forget
     # (semi + anti), the pairs vote and the ghost probe
-    _drop_av_slot(_AV_CAPPED_CACHE, "audio")
-    subfps = audio_subfingerprint_frame(
-        _audio_forget_fixture(docs, base=True, variants=True)
-    ).persist()
-    _AV_CAPPED_CACHE["audio"] = [subfps]
+    subfps = persist_slot(
+        "av.capped.audio",
+        lambda: audio_subfingerprint_frame(
+            _audio_forget_fixture(docs, base=True, variants=True)
+        ),
+    )
     index = attach_subfp_df(subfps)
     fids = docs.filter(F.col("doc_id") % 10 == 3).select(
         F.col("doc_id").alias("audio_id")
@@ -3914,11 +3903,12 @@ def av_video_offset_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one decode pass feeds the stats build, the forget split (semi +
     # anti), the pairs vote and the ghost probe
-    _drop_av_slot(_AV_CAPPED_CACHE, "video")
-    frames = video_dhash_frames(
-        _video_forget_fixture(docs, base=True, variants=True)
-    ).persist()
-    _AV_CAPPED_CACHE["video"] = [frames]
+    frames = persist_slot(
+        "av.capped.video",
+        lambda: video_dhash_frames(
+            _video_forget_fixture(docs, base=True, variants=True)
+        ),
+    )
     stats = video_block_df(frames)
     fids = docs.filter(F.col("doc_id") % 10 == 3).select(
         F.col("doc_id").alias("video_id")
@@ -4072,16 +4062,16 @@ def av_audio_fp_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stats table feeds three consumers (quantile histogram,
     # report aggregate, dropped-value listing) — persist the BOUNDED
     # stats, so the WAV corpus decodes once
-    _drop_av_slot(_AV_CAPPED_CACHE, "audio")
-    stats = (
-        audio_subfingerprint_frame(
-            _audio_silence_offset_fixture(docs, base=True, variants=False)
-        )
-        .groupBy("sub32")
-        .agg(F.count("*").alias("df"))
-        .persist()
+    stats = persist_slot(
+        "av.capped.audio",
+        lambda: (
+            audio_subfingerprint_frame(
+                _audio_silence_offset_fixture(docs, base=True, variants=False)
+            )
+            .groupBy("sub32")
+            .agg(F.count("*").alias("df"))
+        ),
     )
-    _AV_CAPPED_CACHE["audio"] = [stats]
     cap = calibrate_cap(stats, quantile=0.99, margin=4)
     report = cap_report(stats, cap).selectExpr(
         "stack(5, 'cap', cap, 'n_values', n_values, "
@@ -4286,7 +4276,6 @@ def av_audio_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, two bounded stats merges, and the compaction the
     store was due anyway."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -4305,9 +4294,9 @@ def av_audio_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.ntile(3).over(Window.orderBy("audio_id"))
     )
     # one decode pass feeds three segment writes + three stats appends
-    _drop_av_slot(_AV_CAPPED_CACHE, "audio")
-    sliced = subs.join(F.broadcast(bt), "audio_id").persist()
-    _AV_CAPPED_CACHE["audio"] = [sliced]
+    sliced = persist_slot(
+        "av.capped.audio", lambda: subs.join(F.broadcast(bt), "audio_id")
+    )
     # materialize the cache with a PARALLEL action first: every
     # staging write below coalesces to one file (write_partitions=1),
     # and a coalesce(1) over an unmaterialized cache would compute the
@@ -4315,7 +4304,7 @@ def av_audio_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count runs it 32-wide once, staging then reads cached blocks
     sliced.count()
 
-    root = tempfile.mkdtemp(prefix="dwh_av_window_")
+    root = scratch_dir("dwh_av_window_")
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
     # six independent staging writes over ONE persisted decode pass —
@@ -4454,7 +4443,6 @@ def av_video_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames, two bounded stats merges, and the compaction the store
     was due anyway."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -4473,14 +4461,14 @@ def av_video_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.ntile(3).over(Window.orderBy("video_id"))
     )
     # one decode pass feeds three segment writes + three stats appends
-    _drop_av_slot(_AV_CAPPED_CACHE, "video")
-    sliced = frames.join(F.broadcast(bt), "video_id").persist()
-    _AV_CAPPED_CACHE["video"] = [sliced]
+    sliced = persist_slot(
+        "av.capped.video", lambda: frames.join(F.broadcast(bt), "video_id")
+    )
     # parallel cache materialization before the coalesce(1) staging
     # writes — same rationale as the audio binding above
     sliced.count()
 
-    root = tempfile.mkdtemp(prefix="dwh_av_video_window_")
+    root = scratch_dir("dwh_av_video_window_")
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
     # pooled staging over the one persisted frame pass (ingest.py:

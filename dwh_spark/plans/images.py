@@ -27,6 +27,7 @@ from dwh_spark.multimodal.images import (
     supersede_keep_latest,
 )
 from dwh_spark.plans.registry import query
+from dwh_spark.session import persist_slot
 from dwh_spark.sources.catalog import load_table
 
 _MAGICS: dict[int, bytes] = {
@@ -1223,15 +1224,10 @@ def _imgs_feature_frame(imgs: DataFrame) -> DataFrame:
     )
 
 
-# live persisted feature frames (same rotation discipline as
-# documents.py:_CORPUS_SEM_CACHE): the slim (id, md5, ok, dhash,
+# The image queries keep their persisted feature frames in ONE slot
+# (persist_slot "images.corpus"): the slim (id, md5, ok, dhash,
 # contrast) frame feeds four downstream consumers — re-decoding the
 # corpus per consumer would quadruple the only expensive stage.
-# Rotation order: the OLD entry is popped and unpersisted BEFORE the
-# new frame is persisted, so consecutive same-session runs never
-# overlap fill-and-evict (the ~2x second-run artifact, VERDICT r13
-# What's-wrong #4)
-_IMGS_CORPUS_CACHE: list = []
 
 _IMGS_CORPUS_BUILD_ORACLE = """
 WITH ids AS (
@@ -1352,10 +1348,9 @@ def imgs_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
-    feats = _imgs_feature_frame(_imgs_corpus_fixture(docs)).persist()
-    _IMGS_CORPUS_CACHE.append(feats)
+    feats = persist_slot(
+        "images.corpus", lambda: _imgs_feature_frame(_imgs_corpus_fixture(docs))
+    )
 
     qual = feats.filter(F.col("ok") & (F.col("contrast") > 0))
     canon = qual.groupBy("bmd5").agg(F.min("image_id").alias("image_id"))
@@ -1507,15 +1502,17 @@ def imgs_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
-    corpus_feats = _imgs_feature_frame(
-        _imgs_corpus_fixture(docs, base=True, variants=False)
-    ).persist()
-    batch_feats = _imgs_feature_frame(
-        _imgs_corpus_fixture(docs, base=False, variants=True)
-    ).persist()
-    _IMGS_CORPUS_CACHE.extend([corpus_feats, batch_feats])
+    corpus_feats, batch_feats = persist_slot(
+        "images.corpus",
+        lambda: (
+            _imgs_feature_frame(
+                _imgs_corpus_fixture(docs, base=True, variants=False)
+            ),
+            _imgs_feature_frame(
+                _imgs_corpus_fixture(docs, base=False, variants=True)
+            ),
+        ),
+    )
 
     qual = batch_feats.filter(F.col("ok") & (F.col("contrast") > 0))
     # exact probe: batch hash set BROADCAST into the streamed corpus
@@ -1709,14 +1706,13 @@ def imgs_phash_capped_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(32)
     )
     # the fingerprint frame feeds BOTH the stats build and the probe —
-    # persist so the image corpus is decoded once, not twice (ADVICE
-    # r13; same rotation discipline as the corpus builds above)
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
-    index = dhash_frame(
-        _imgs_flat_phash_fixture(docs, base=True, variants=False)
-    ).persist()
-    _IMGS_CORPUS_CACHE.append(index)
+    # persist so the image corpus is decoded once, not twice (ADVICE r13)
+    index = persist_slot(
+        "images.corpus",
+        lambda: dhash_frame(
+            _imgs_flat_phash_fixture(docs, base=True, variants=False)
+        ),
+    )
     stats = simhash_block_df(
         index.select("image_id", F.col("dhash").alias("simhash")),
         n_blocks=4,
@@ -1871,7 +1867,7 @@ def imgs_phash_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       survivor-corpus oracle cannot have.
 
     One decode pass feeds the stats build, the forget split (semi +
-    anti), both arms (persist-rotation discipline, pop-before-persist).
+    anti), both arms (one persist_slot rotation).
     Durability note as the twins: the same anti-join runs as
     ``ParquetAppendLog.compact(transform=...)``."""
     from dwh_spark.multimodal.perceptual import DHASH_BITS, dhash_frame
@@ -1887,14 +1883,12 @@ def imgs_phash_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
-    sh = (
-        dhash_frame(_imgs_forget_fixture(docs, base=True, variants=True))
-        .select("image_id", F.col("dhash").alias("simhash"))
-        .persist()
+    sh = persist_slot(
+        "images.corpus",
+        lambda: dhash_frame(
+            _imgs_forget_fixture(docs, base=True, variants=True)
+        ).select("image_id", F.col("dhash").alias("simhash")),
     )
-    _IMGS_CORPUS_CACHE.append(sh)
     n_blocks = 4
     block_bits = DHASH_BITS // n_blocks
     stats = simhash_block_df(sh, n_blocks=n_blocks, block_bits=block_bits)

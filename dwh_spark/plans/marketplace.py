@@ -24,6 +24,7 @@ from dwh_spark.operators.transitions import (
     materialize_users,
 )
 from dwh_spark.plans.registry import query
+from dwh_spark.session import scratch_dir, session_memo
 from dwh_spark.sources.marketplace_fixture import BB, SB, U1, U2, marketplace_events
 
 # (token, owner, status, price, seller_beneficiary, buyout, opening) —
@@ -94,17 +95,14 @@ def marketplace_nfts_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One stream drain per session serves every marketplace_stream_* query
 # — mirrors the reference, where one continuous indexer feeds all state
 # tables.
-_STREAM_STORES: dict[str, tuple] = {}
-
-
 def _stream_state(spark: SparkSession):
-    key = spark.sparkContext.applicationId
-    if key in _STREAM_STORES:
-        return _STREAM_STORES[key]
+    return session_memo(spark, "stream_stores", lambda: _drain_stream_stores(spark))
+
+
+def _drain_stream_stores(spark: SparkSession):
     import os
     import shutil
     import sys
-    import tempfile
     import time
 
     from pyspark.sql.window import Window
@@ -114,7 +112,7 @@ def _stream_state(spark: SparkSession):
 
     t0 = time.perf_counter()
     events = marketplace_events(spark)
-    root = tempfile.mkdtemp(prefix="mkt_stream_")
+    root = scratch_dir("mkt_stream_")
     input_dir = os.path.join(root, "input")
     os.makedirs(input_dir)
     # stage 4 chain-ordered slices; mtimes make the file-source cursor
@@ -162,8 +160,7 @@ def _stream_state(spark: SparkSession):
         f"drain(2 micro-batches x 6 stores) {t_drain - t_stage:.2f}s",
         file=sys.stderr,
     )
-    _STREAM_STORES[key] = stores
-    return _STREAM_STORES[key]
+    return stores
 
 
 @query("marketplace_stream_nfts_state", oracle=_NFTS_STATE_ORACLE)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dwh_spark.plans.registry import query
+from dwh_spark.session import scratch_dir, session_memo
 from dwh_spark.sources.catalog import load_table
 
 
@@ -633,19 +634,12 @@ def sql_correlated_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tables are bucketed once per session into a temp warehouse; the
 # driver-facing parquet stays untouched.
 # ---------------------------------------------------------------------------
-_BUCKETED_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[key]
-    import tempfile
     import uuid
 
     from dwh_spark.sources.sinks import write_bucketed
 
-    root = tempfile.mkdtemp(prefix="bucketed_")
+    root = scratch_dir("bucketed_")
     uid = uuid.uuid4().hex[:8]
     ot, ct = f"orders_b_{uid}", f"customer_b_{uid}"
     write_bucketed(
@@ -658,8 +652,7 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         bucket_by=["c_custkey"], n_buckets=16, sort_by=["c_custkey"],
         path=f"{root}/customer",
     )
-    _BUCKETED_CACHE[key] = (ot, ct)
-    return _BUCKETED_CACHE[key]
+    return ot, ct
 
 
 @query(
@@ -679,7 +672,9 @@ def bucketed_cust_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle left is the 5-row segment rollup. At 100 TB this is the
     difference between joining in place and moving the fact table.
     Results must equal the plain join over the un-bucketed parquet."""
-    ot, ct = _bucketed_pair(spark, sf_dir)
+    ot, ct = session_memo(
+        spark, ("bucketed_pair", sf_dir), lambda: _bucketed_pair(spark, sf_dir)
+    )
     o, c = spark.table(ot), spark.table(ct)
     joined = o.hint("merge").join(c, o.o_custkey == c.c_custkey)
     return joined.groupBy(F.col("c_mktsegment").alias("mktsegment")).agg(

@@ -10,12 +10,11 @@ history or tails the chain live).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.plans.registry import query
+from dwh_spark.session import scratch_dir, session_memo
 from dwh_spark.sources.catalog import load_table
 from dwh_spark.streaming.ingest import (
     ParquetStateStore,
@@ -28,32 +27,32 @@ from dwh_spark.streaming.ingest import (
 
 _N_FILES = 4  # staged event files → micro-batches per stream run
 
-# One staged copy of the events table serves every streaming query in
-# the process (the stage write is the most expensive fixed cost); each
-# query still gets its own checkpoint/state dirs under a fresh root.
-_STAGE_CACHE: dict[str, str] = {}
-
 
 def _staged_events(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> tuple[DataFrame, str]:
-    """Stage the events table as a multi-file dir (once per sf_dir) and
-    open it as an ordered file-stream."""
-    if sf_dir not in _STAGE_CACHE:
-        stage_root = tempfile.mkdtemp(prefix="dwh_stream_stage_")
-        _STAGE_CACHE[sf_dir] = stage_stream_input(
-            spark, load_table(spark, sf_dir, "events"), f"{stage_root}/input", _N_FILES
-        )
-    root = tempfile.mkdtemp(prefix="dwh_stream_")
-    return (
-        stream_events(
-            spark, _STAGE_CACHE[sf_dir], max_files_per_trigger=max_files_per_trigger
+    """Stage the events table as a multi-file dir and open it as an
+    ordered file-stream. One staged copy serves every streaming query
+    of the application (the stage write is the most expensive fixed
+    cost); each query still gets its own checkpoint/state dirs under a
+    fresh root."""
+    stage = session_memo(
+        spark,
+        ("staged_events", sf_dir),
+        lambda: stage_stream_input(
+            spark,
+            load_table(spark, sf_dir, "events"),
+            f"{scratch_dir('dwh_stream_stage_')}/input",
+            _N_FILES,
         ),
-        root,
+    )
+    return (
+        stream_events(spark, stage, max_files_per_trigger=max_files_per_trigger),
+        scratch_dir("dwh_stream_"),
     )
 
 
-# INPUT-staging memo (disclosed, same pattern as _STAGE_CACHE above):
+# INPUT-staging memo (disclosed, like the session_memo stages):
 # the staged micro-batch files are a pure function of the DETERMINISTIC
 # input frame (all callers stage md5/arithmetic-synthesized fixtures or
 # raw table projections — no rand()), every consumer only READS them
@@ -76,7 +75,6 @@ def _stage_ntile_slices(df: DataFrame, root: str, n: int, order_col: str) -> str
     outlive ``root``."""
     import os
     import shutil
-    import tempfile as _tempfile
 
     from pyspark.sql.window import Window
 
@@ -84,7 +82,7 @@ def _stage_ntile_slices(df: DataFrame, root: str, n: int, order_col: str) -> str
         if c_n == n and c_col == order_col and df.sameSemantics(c_df):
             return c_dir
 
-    stage_root = _tempfile.mkdtemp(prefix="dwh_ntile_stage_")
+    stage_root = scratch_dir("dwh_ntile_stage_")
     input_dir = os.path.join(stage_root, "input")
     os.makedirs(input_dir)
     sliced = df.withColumn(
@@ -296,7 +294,7 @@ def streaming_rollup_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_asof_")
+    root = scratch_dir("dwh_rollup_asof_")
     input_dir = _stage_ntile_slices(events, root, 3, "event_id")
 
     stream = (
@@ -374,7 +372,7 @@ def streaming_rollup_version_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_gc_")
+    root = scratch_dir("dwh_rollup_gc_")
     input_dir = _stage_ntile_slices(events, root, 3, "event_id")
 
     stream = (
@@ -461,7 +459,7 @@ def streaming_rollup_version_delta(spark: SparkSession, sf_dir: str) -> DataFram
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_delta_")
+    root = scratch_dir("dwh_rollup_delta_")
     input_dir = _stage_ntile_slices(events, root, 3, "event_id")
 
     stream = (
@@ -524,7 +522,7 @@ def streaming_state_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_state_lookup_")
+    root = scratch_dir("dwh_state_lookup_")
     input_dir = _stage_ntile_slices(events, root, 3, "event_id")
 
     stream = (
@@ -577,7 +575,7 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output must equal the batch distinct count of the un-duplicated
     table."""
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_dedup_")
+    root = scratch_dir("dwh_dedup_")
     # two staged copies → the same event_id arrives in two batches
     doubled = events.unionByName(events)
     stage_stream_input(spark, doubled.repartition(4), f"{root}/input", 4)
@@ -784,9 +782,6 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).select("nation", "n_events", "sum_value")
 
 
-_LEFTJOIN_STAGE_CACHE: dict[str, str] = {}
-
-
 @query(
     "streaming_click_purchase_left_join",
     oracle="""
@@ -833,8 +828,9 @@ def streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Data
 
     t_start = _time.perf_counter()
     events = load_table(spark, sf_dir, "events")
-    if sf_dir not in _LEFTJOIN_STAGE_CACHE:
-        stage = tempfile.mkdtemp(prefix="dwh_stream_lj_") + "/input"
+
+    def stage_input() -> str:
+        stage = scratch_dir("dwh_stream_lj_") + "/input"
         # stage only the 4 columns the join reads — the staged dir is
         # harness scaffolding for an ordered file log, and dropping
         # value/props halves the write and every micro-batch scan
@@ -856,20 +852,22 @@ def streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Data
                  AS t(event_id, ts, user_id, event_type)"""
         )
         flush.coalesce(1).write.mode("append").parquet(stage)
-        _LEFTJOIN_STAGE_CACHE[sf_dir] = stage
         print(
             f"# click/purchase lj staging: {_time.perf_counter() - t_start:.2f}s",
             file=sys.stderr,
         )
-    root = tempfile.mkdtemp(prefix="dwh_stream_")
+        return stage
+
+    stage = session_memo(
+        spark, ("click_purchase_stage", sf_dir), stage_input
+    )
+    root = scratch_dir("dwh_stream_")
     t_drain = _time.perf_counter()
     # trigger=4 over the 7 staged files → two DATA micro-batches (4
     # files, then 2 + the sentinel) + the no-data flush batch — still
     # a genuinely batched replay, at half the per-batch incremental-
     # planning/state-commit overhead of the old (3,3,1) split.
-    stream = stream_events(
-        spark, _LEFTJOIN_STAGE_CACHE[sf_dir], max_files_per_trigger=4
-    )
+    stream = stream_events(spark, stage, max_files_per_trigger=4)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     # 4 partitions × 4 state stores per batch: measured drain at sf0.1
     # 4.4 s (8 parts, 3 triggers) → 3.0 s (4 parts, 2 triggers),
@@ -998,7 +996,7 @@ def streaming_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.docs_ingest import read_ingest_results, run_minhash_ingest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="dwh_mh_ingest_")
+    root = scratch_dir("dwh_mh_ingest_")
     # 3 id-ordered slices, mtime-sequenced (the marketplace staging
     # pattern) so the file-source cursor delivers ascending doc_ids
     input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
@@ -1141,7 +1139,7 @@ def streaming_minhash_forget_ingest(
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_forget_ingest_")
+    root = scratch_dir("dwh_mh_forget_ingest_")
     input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
@@ -1293,7 +1291,7 @@ def streaming_minhash_ttl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_ttl_ingest_")
+    root = scratch_dir("dwh_mh_ttl_ingest_")
     input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
@@ -1386,7 +1384,7 @@ def streaming_minhash_ttl_compact_ingest(
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_ttl_cmp_ingest_")
+    root = scratch_dir("dwh_mh_ttl_cmp_ingest_")
     input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
@@ -1541,7 +1539,7 @@ def docs_minhash_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_asof_")
+    root = scratch_dir("dwh_mh_asof_")
     sliced = docs.withColumn("__slice", F.ntile(3).over(Window.orderBy("doc_id")))
     staged = os.path.join(root, "staged")
     sliced.repartition(1).write.partitionBy("__slice").parquet(staged)
@@ -1718,7 +1716,7 @@ def docs_minhash_delta_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_delta_")
+    root = scratch_dir("dwh_mh_delta_")
     sliced = docs.withColumn("__slice", F.ntile(3).over(Window.orderBy("doc_id")))
     staged = os.path.join(root, "staged")
     sliced.repartition(1).write.partitionBy("__slice").parquet(staged)
@@ -1839,7 +1837,7 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import ParquetAppendLog
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_ingest_")
+    root = scratch_dir("dwh_sem_ingest_")
     input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
 
     # day-0 centroids: md5-smallest-8 of the FIRST slice (the only
@@ -1933,7 +1931,7 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     images = _phash_fixture_images(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_phash_ingest_")
+    root = scratch_dir("dwh_phash_ingest_")
     input_dir = _stage_ntile_slices(images, root, 3, "image_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2032,7 +2030,7 @@ def streaming_phash_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("doc_id").alias("image_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_phash_forget_ingest_")
+    root = scratch_dir("dwh_phash_forget_ingest_")
     input_dir = _stage_ntile_slices(images, root, 3, "image_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2130,7 +2128,7 @@ def streaming_audio_fp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_fp_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_fp_ingest_")
+    root = scratch_dir("dwh_audio_fp_ingest_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2218,7 +2216,7 @@ def streaming_video_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     vids = _video_phash_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_phash_ingest_")
+    root = scratch_dir("dwh_video_phash_ingest_")
     input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2315,7 +2313,7 @@ def streaming_audio_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_ingest_")
+    root = scratch_dir("dwh_audio_offset_ingest_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2406,7 +2404,7 @@ def streaming_video_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     vids = _video_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_ingest_")
+    root = scratch_dir("dwh_video_offset_ingest_")
     input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2520,7 +2518,7 @@ def streaming_audio_offset_entropy_ingest(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_silence_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_entropy_ingest_")
+    root = scratch_dir("dwh_audio_offset_entropy_ingest_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2693,7 +2691,7 @@ def streaming_audio_offset_cap_compaction(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_cap_compaction_")
+    root = scratch_dir("dwh_audio_offset_cap_compaction_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -2871,7 +2869,7 @@ def streaming_audio_offset_window_ingest(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_window_ingest_")
+    root = scratch_dir("dwh_audio_offset_window_ingest_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -3003,7 +3001,7 @@ def streaming_audio_offset_forget_ingest(
         F.col("doc_id").alias("audio_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_forget_ingest_")
+    root = scratch_dir("dwh_audio_offset_forget_ingest_")
     input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -3131,7 +3129,7 @@ def streaming_video_offset_forget_ingest(
         F.col("doc_id").alias("video_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_forget_ingest_")
+    root = scratch_dir("dwh_video_offset_forget_ingest_")
     input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -3295,7 +3293,7 @@ def streaming_video_offset_cap_compaction(
     )
     vids = _video_title_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_cap_compaction_")
+    root = scratch_dir("dwh_video_offset_cap_compaction_")
     input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
@@ -3420,7 +3418,7 @@ def streaming_semantic_retrain_ingest(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_retrain_")
+    root = scratch_dir("dwh_sem_retrain_")
     input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
 
     from dwh_spark.streaming.ingest import ParquetAppendLog
@@ -3596,7 +3594,7 @@ def streaming_semantic_window_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     from dwh_spark.streaming.maintenance import run_maintenance_window
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_window_")
+    root = scratch_dir("dwh_sem_window_")
     input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
 
     seeds = (

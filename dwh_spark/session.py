@@ -17,9 +17,16 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def get_spark(app_name: str = "dwh-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -61,3 +68,78 @@ def get_spark(app_name: str = "dwh-spark", shuffle_partitions: int | None = None
         )
     )
     return builder.getOrCreate()
+
+
+class _LockedTable:
+    """A dict whose keys each get their own lock, created on first use."""
+
+    def __init__(self) -> None:
+        self.values: dict = {}
+        self._locks: dict = {}
+        self._guard = threading.Lock()
+
+    def lock(self, key: Hashable) -> threading.Lock:
+        with self._guard:
+            return self._locks.setdefault(key, threading.Lock())
+
+
+_SLOTS = _LockedTable()
+_MEMOS = _LockedTable()
+
+
+def persist_slot(name: str, build: Callable[[], _T]) -> _T:
+    """Unpersist what slot ``name`` holds, call ``build()``, persist
+    each frame it returns (a frame or a tuple, persisted in order so a
+    later frame reads an earlier one's cache), keep them and return
+    them. For a frame a query's lazy result still reads: the NEXT call
+    releases it, so each slot holds one live entry.
+
+    Unpersist comes first because Spark keys its cache by plan: a
+    repeat run builds a frame with the plan of the one in the slot, so
+    persisting first is a no-op and the old frame's unpersist then
+    drops the shared entry, and the repeat run recomputes the frame in
+    every job. A per-slot lock serializes one slot's rotations (the
+    capstone thread pools run one slot per family concurrently). A
+    lazy frame kept from an earlier call still computes, uncached.
+    """
+    with _SLOTS.lock(name):
+        for df in _SLOTS.values.pop(name, ()):
+            df.unpersist()
+        built = build()
+        frames = built if isinstance(built, tuple) else (built,)
+        for df in frames:
+            df.persist()
+        _SLOTS.values[name] = frames
+        return built
+
+
+def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) -> _T:
+    """Return ``build()``, built once per Spark application and ``key``
+    under a per-key lock: for inputs later queries only read (a staged
+    table copy, a layout, a drained stream's stores, a shared cached
+    intermediate). A new application builds afresh instead of reading
+    tables or cached frames of a stopped one.
+    """
+    k = (spark.sparkContext.applicationId, key)
+    with _MEMOS.lock(k):
+        if k not in _MEMOS.values:
+            _MEMOS.values[k] = build()
+        return _MEMOS.values[k]
+
+
+_scratch_root: str | None = None
+_scratch_lock = threading.Lock()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir ``prefix*`` under this process's scratch root. The
+    first call creates the root under ``$TMPDIR`` and removes it at
+    exit, so a process that only imports this module (a Python worker)
+    never owns or deletes one.
+    """
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="dwh_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
