@@ -55,11 +55,6 @@ def keep_canonical(df: DataFrame, text: str = "text", key: str = "doc_id") -> Da
     return df.join(canon, on=key, how="left_semi")
 
 
-def shingle_index(df: DataFrame, text: str = "text", key: str = "doc_id", k: int = 3) -> DataFrame:
-    """Inverted index: (key, shingle) with per-doc distinct shingles."""
-    return df.select(F.col(key), F.explode(shingles(F.col(text), k)).alias("shingle"))
-
-
 def jaccard_pairs(
     df: DataFrame, text: str = "text", key: str = "doc_id", k: int = 3, threshold: float = 0.7
 ) -> DataFrame:
@@ -289,15 +284,6 @@ def minhash_signature_arrays(
     return idx.groupBy(key).agg(*mins).select(
         F.col(key), F.array(*(F.col(f"__m{s}") for s in range(n_hashes))).alias("sigs")
     )
-
-
-def minhash_signatures(
-    df: DataFrame, text: str = "text", key: str = "doc_id", k: int = 3, n_hashes: int = 16
-) -> DataFrame:
-    """(key, seed, minhash) long form of
-    :func:`minhash_signature_arrays` (kept for API/test parity)."""
-    arr = minhash_signature_arrays(df, text, key, k, n_hashes)
-    return arr.select(key, F.posexplode("sigs").alias("seed", "minhash"))
 
 
 def _banded(

@@ -45,16 +45,6 @@ def bigram_instances(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_model(instances: DataFrame) -> DataFrame:
-    """MLE bigram table: (w1, w2, c12, c1) where c1 = total bigram
-    occurrences with prefix w1. c1 is derived from the (w1, w2) counts
-    by a second, much smaller aggregation instead of re-scanning the
-    instance table."""
-    c12 = instances.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    return c12.join(c1, "w1")
-
-
 def doc_predictability(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Mean bigram probability per document, self-trained on the input
     corpus: score = avg over bigram occurrences of c(w1,w2) / c(w1, ·).

@@ -55,14 +55,6 @@ def train_test_split(df: DataFrame, key: str, test_pct: int = 10) -> DataFrame:
     )
 
 
-def stratified_sample(df: DataFrame, key: str, pct: int) -> DataFrame:
-    """Deterministic ``pct``% sample: keep rows whose key-hash bucket
-    falls below ``pct``. Stratification is free — apply AFTER any
-    filter/groupBy key you stratify on, since membership is per-row
-    and independent of the stratum."""
-    return df.filter(hash_bucket(F.col(key)) < pct)
-
-
 def weighted_sample(df: DataFrame, key: str, weight: Column) -> DataFrame:
     """Deterministic Bernoulli sample with a PER-ROW keep probability:
     keep a row iff its md5-uniform draw (hash_bucket over 1e6 buckets,

@@ -123,8 +123,9 @@ def streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_streaming.py) at half the snapshot-write cost."""
     stream, root = _staged_events(spark, sf_dir, max_files_per_trigger=2)
     # fact-scale state ⇒ range-partitioned manifest-tracked snapshots
-    # (8 key-range files per version; lookup() prunes through the
-    # manifest) — the MERGE body below is unchanged by the layout
+    # (at most 8 key-range files per version, sized to the snapshot's
+    # bytes; lookup() prunes through the manifest) — the MERGE body
+    # below is unchanged by the layout
     store = ParquetStateStore(f"{root}/state", range_key="user_id", n_files=8)
     run_incremental_compaction(
         stream, store, f"{root}/checkpoint",
@@ -502,11 +503,11 @@ def streaming_state_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MANIFEST-PRUNED state point read made driver-gated (S10 at
     state scale): a per-user rollup folds three micro-batches into a
     RANGE-PARTITIONED ``ParquetStateStore`` (``range_key='user_id'``,
-    8 manifest-tracked files per snapshot — the Iceberg
-    file-statistics shape one level deep), then five users are read
-    back through ``lookup()``, which consults the snapshot manifest's
-    per-file [min_key, max_key] ranges and opens ONLY the covering
-    file — at a billion state rows the read touches one file, not the
+    at most 8 manifest-tracked files per snapshot, sized to its bytes
+    — the Iceberg file-statistics shape one level deep), then five
+    users are read back through ``lookup()``, which consults the
+    snapshot manifest's per-file [min_key, max_key] ranges and opens
+    ONLY the covering file — at a billion state rows the read touches one file, not the
     snapshot (the manifest file-touch discipline is plan-pinned in
     tests/test_streaming.py; this gate pins the end-to-end semantics:
     merged-across-batches counts and exact decimal sums per probed

@@ -210,7 +210,7 @@ class ParquetStateStore:
 
     **Partitioned snapshots** (``range_key``): a 100 TB state table
     cannot live one file deep — pass ``range_key`` (+ ``n_files``) and
-    every snapshot is written as N range-partitioned files plus a
+    every snapshot is written as k range-partitioned files plus a
     ``_manifest.json`` recording each file's key range and row count
     (the Delta/Iceberg file-statistics shape, one level deep). The
     manifest is built from the written files' parquet footers (row
@@ -219,7 +219,14 @@ class ParquetStateStore:
     half-manifest snapshot; ``lookup()`` uses it to prune to the one
     file covering a key instead of scanning the snapshot. The
     foreachBatch MERGE bodies are unchanged — layout is entirely the
-    store's concern.
+    store's concern. k is sized to the bytes: one file per
+    ``spark.sql.files.maxPartitionBytes`` of the CURRENT snapshot's
+    data files, at most ``n_files`` (exactly ``n_files`` for the first
+    snapshot, which has no size to go by). Each written file costs a
+    write task, and each task deserializes the whole Hadoop conf —
+    tens of ms of CPU whatever the file's size — so a small state is
+    one file (``coalesce(1)``: no range exchange, no sampling job)
+    and the files only split once a scan would split them anyway.
 
     **Schema sidecar**: every snapshot dir also holds a
     ``_schema.json`` with the written frame's schema, which every read
@@ -250,7 +257,9 @@ class ParquetStateStore:
         32 near-empty part files, and the per-file task/open overhead
         dominates the whole fold. Leave None for fact-scale states, or
         pass ``range_key`` to range-partition fact-scale snapshots
-        into ``n_files`` manifest-tracked files."""
+        into manifest-tracked files. ``n_files`` is a cap (and the
+        first snapshot's count), not a target: every file pays a fixed
+        per-task cost, so later snapshots are sized to their bytes."""
         self.root = root
         self.write_partitions = write_partitions
         self.range_key = range_key
@@ -417,7 +426,11 @@ class ParquetStateStore:
         current."""
         version_dir = self.version_dir(batch_id)
         if self.range_key is not None:
-            df = df.repartitionByRange(self.n_files, F.col(self.range_key))
+            k = self._range_files(df.sparkSession)
+            if k == 1:
+                df = df.coalesce(1)  # no range exchange, no sampling job
+            else:
+                df = df.repartitionByRange(k, F.col(self.range_key))
         elif self.write_partitions is not None:
             df = df.coalesce(self.write_partitions)
         df.write.mode("overwrite").parquet(version_dir)
@@ -425,6 +438,22 @@ class ParquetStateStore:
         if self.range_key is not None:
             self._write_manifest(version_dir, batch_id)
         return version_dir
+
+    def _range_files(self, spark: SparkSession) -> int:
+        """Range files for the next snapshot: one per
+        ``spark.sql.files.maxPartitionBytes`` of the CURRENT snapshot's
+        data files, capped at ``n_files`` (``n_files`` before the first
+        commit)."""
+        version_dir = self._pointed_dir()
+        if version_dir is None:
+            return self.n_files
+        on_disk = sum(
+            e.stat().st_size
+            for e in os.scandir(version_dir)
+            if not e.name.startswith(("_", "."))  # Spark's rule for what a scan reads
+        )
+        cap = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        return min(self.n_files, max(1, -(-on_disk // cap)))
 
     def flip(self, batch_id: int) -> None:
         """Atomically point CURRENT at ``batch_id``'s snapshot — the
@@ -1115,13 +1144,11 @@ def run_incremental_compaction(
         lc = store.last_committed()
         if lc is not None and batch_id <= lc:
             return
-        batch_latest = latest_state_agg(batch_df, keys, seq)
+        # one aggregation over state ∪ batch: max_by is associative, so
+        # pre-aggregating the batch only adds an exchange and a job
         cur = store.current(spark)
-        if cur is None:
-            merged = batch_latest
-        else:
-            merged = latest_state_agg(cur.unionByName(batch_latest), keys, seq)
-        store.commit(merged, batch_id)
+        rows = batch_df if cur is None else cur.unionByName(batch_df)
+        store.commit(latest_state_agg(rows, keys, seq), batch_id)
 
     q = (
         events.writeStream.foreachBatch(merge)

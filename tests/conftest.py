@@ -68,6 +68,20 @@ def n_jobs(spark, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def n_tasks(spark, group: str) -> int:
+    """Tasks run so far under job group ``group``: ``numTasks`` summed
+    over the group's distinct stages, leaving out skipped stages (a
+    reused shuffle's map stage is listed in the job but runs nothing)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return sum(i.numTasks for i in infos if i is not None and i.numCompletedTasks)
+
+
 def under_group(spark, group: str, fn):
     """Run ``fn`` with its jobs tagged ``group``; return (result, jobs)."""
     sc = spark.sparkContext

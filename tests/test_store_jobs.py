@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from dwh_spark.operators.latest_state import latest_state_agg
 from dwh_spark.sources.catalog import load_table
 from dwh_spark.streaming.ingest import (
     SCHEMA_SIDECAR,
@@ -24,7 +25,7 @@ from dwh_spark.streaming.ingest import (
 )
 from dwh_spark.streaming.phash_ingest import WordDfCapMaintenance
 
-from tests.conftest import n_jobs, under_group
+from tests.conftest import n_jobs, n_tasks, under_group
 
 
 @pytest.fixture
@@ -75,11 +76,16 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
     ).parquet(inbox)
     fold()  # second batch merges into committed state
     roll()
-    fold_jobs, rollup_jobs = (n_jobs(spark, g) for g in stream_groups[2:])
-    # measured with sidecar reads and footer manifests (Spark 4.1,
-    # 8 shuffle partitions): a store read's inference job or the
-    # manifest's re-scan would add to these
-    assert fold_jobs <= 5, fold_jobs
+    fold_group, rollup_group = stream_groups[2:]
+    fold_jobs, rollup_jobs = n_jobs(spark, fold_group), n_jobs(spark, rollup_group)
+    # measured with sidecar reads, footer manifests, one aggregation per
+    # fold and a one-file snapshot (Spark 4.1, 8 shuffle partitions): a
+    # store read's inference job, the manifest's re-scan, a second
+    # aggregation or a range write's sampling job would add to these
+    assert fold_jobs <= 2, fold_jobs
+    # 5 scan tasks (the 4-file first snapshot and the batch file), one
+    # for the aggregation and the one-file write
+    assert n_tasks(spark, fold_group) <= 6, n_tasks(spark, fold_group)
     assert rollup_jobs <= 3, rollup_jobs
 
     log.append(events, 0)
@@ -98,17 +104,18 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
         got = frame.count()
         assert n_rows is None or got == n_rows, (name, got, n_rows)
 
-    # a range-store commit costs exactly the jobs of its parquet write
+    # a range-store commit costs exactly the jobs of its parquet write:
+    # the state is a few KB, far below maxPartitionBytes, so the write
+    # is one coalesced file
     merged = state.current(spark).cache()
     merged.count()
     _, write_jobs = under_group(
         spark, "plain write",
-        lambda: merged.repartitionByRange(4, F.col("user_id")).write.parquet(
-            str(tmp_path / "plain")
-        ),
+        lambda: merged.coalesce(1).write.parquet(str(tmp_path / "plain")),
     )
     _, commit_jobs = under_group(spark, "commit", lambda: state.commit(merged, 9))
     merged.unpersist()
+    assert len(state.manifest()["files"]) == 1
     assert commit_jobs == write_jobs
 
 
@@ -176,3 +183,71 @@ def test_df_cap_record_reads_its_segment_without_jobs(spark, tmp_path):
     _, record_jobs = under_group(spark, "record", lambda: maint.record(0))
     assert record_jobs == append_jobs
     assert sorted(stats.current(spark).collect()) == sorted(counts.collect())
+
+
+def _data_bytes(version_dir):
+    return sum(
+        e.stat().st_size for e in os.scandir(version_dir) if not e.name.startswith(("_", "."))
+    )
+
+
+def test_range_snapshot_files_follow_snapshot_bytes(spark, sf_dir, tmp_path):
+    """The first snapshot has ``n_files`` range files; each later one has
+    one per ``spark.sql.files.maxPartitionBytes`` of the snapshot before
+    it, at most ``n_files``, and lookups still prune and read exact rows."""
+    events = load_table(spark, sf_dir, "events")
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="event_id", n_files=4)
+    want = {r["event_id"]: tuple(r) for r in events.collect()}
+    probes = sorted(want)[:2] + sorted(want)[-2:]
+
+    def check(n_files):
+        man = state.manifest()
+        assert len(man["files"]) == n_files, man["files"]
+        spans = sorted((f["min_key"], f["max_key"]) for f in man["files"])
+        assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:])), spans
+        for key in probes:
+            assert [tuple(r) for r in state.lookup(spark, key).collect()] == [want[key]]
+            covering = [f for f in man["files"] if f["min_key"] <= key <= f["max_key"]]
+            assert len(covering) == 1 and (n_files == 1 or len(covering) < n_files)
+
+    state.commit(events, 0)  # no snapshot to size by yet
+    check(4)
+    state.commit(events, 1)  # a few KB, far below maxPartitionBytes
+    check(1)
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    size = _data_bytes(state.version_dir(1))
+    prev = spark.conf.get(conf)
+    try:
+        for batch_id, parts in [(2, 3), (3, 8)]:  # under n_files, then over it
+            cap = size // parts + 1
+            spark.conf.set(conf, str(cap))
+            state.commit(events, batch_id)
+            spark.conf.set(conf, prev)
+            check(min(4, -(-size // cap)))
+            size = _data_bytes(state.version_dir(batch_id))
+    finally:
+        spark.conf.set(conf, prev)
+    assert spark.conf.get(conf) == prev
+
+
+def test_fold_equals_latest_state_replay(spark, sf_dir, tmp_path):
+    """Folding three micro-batches with one aggregation over state ∪ batch
+    leaves exactly the rows the one-shot ``latest_state_agg`` replay of
+    all events keeps."""
+    events = load_table(spark, sf_dir, "events")
+    inbox = str(tmp_path / "inbox")
+    for i in range(3):
+        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(inbox)
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=4)
+    seq = F.struct("ts", "event_id")
+    run_incremental_compaction(
+        stream_events(spark, inbox, events.schema), state,
+        str(tmp_path / "ckpt"), ["user_id"], seq,
+    )
+    assert state.last_committed() == 2
+    assert sorted(state.current(spark).collect()) == sorted(
+        latest_state_agg(events, ["user_id"], seq).collect()
+    )
