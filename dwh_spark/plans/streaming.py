@@ -35,19 +35,20 @@ def _staged_events(
     ordered file-stream. One staged copy serves every streaming query
     of the application (the stage write is the most expensive fixed
     cost); each query still gets its own checkpoint/state dirs under a
-    fresh root."""
+    fresh root. The stream takes the staged frame's schema, which
+    ``load_table`` memoizes, so opening it runs no inference job."""
+    events = load_table(spark, sf_dir, "events")
     stage = session_memo(
         spark,
         ("staged_events", sf_dir),
         lambda: stage_stream_input(
-            spark,
-            load_table(spark, sf_dir, "events"),
-            f"{scratch_dir('dwh_stream_stage_')}/input",
-            _N_FILES,
+            spark, events, f"{scratch_dir('dwh_stream_stage_')}/input", _N_FILES
         ),
     )
     return (
-        stream_events(spark, stage, max_files_per_trigger=max_files_per_trigger),
+        stream_events(
+            spark, stage, events.schema, max_files_per_trigger=max_files_per_trigger
+        ),
         scratch_dir("dwh_stream_"),
     )
 
@@ -506,10 +507,13 @@ def streaming_state_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at most 8 manifest-tracked files per snapshot, sized to its bytes
     — the Iceberg file-statistics shape one level deep), then five
     users are read back through ``lookup()``, which consults the
-    snapshot manifest's per-file [min_key, max_key] ranges and opens
-    ONLY the covering file — at a billion state rows the read touches one file, not the
-    snapshot (the manifest file-touch discipline is plan-pinned in
-    tests/test_streaming.py; this gate pins the end-to-end semantics:
+    snapshot manifest's per-file [min_key, max_key] ranges, reads ONLY
+    the covering file's matching rows on the driver (pyarrow, key
+    filter pushed down) and returns them as a local frame — at a
+    billion state rows the read touches one file, not the snapshot,
+    and launches no Spark job (the manifest file-touch discipline and
+    the job count are pinned in tests/test_streaming.py and
+    tests/test_store_jobs.py; this gate pins the end-to-end semantics:
     merged-across-batches counts and exact decimal sums per probed
     key). The oracle aggregates the probed users straight from the
     events table, so a lookup that read the wrong file, the wrong

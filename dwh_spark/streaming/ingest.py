@@ -133,14 +133,10 @@ def _write_schema_sidecar(df: DataFrame, path: str) -> None:
     os.replace(tmp, os.path.join(path, SCHEMA_SIDECAR))
 
 
-def _read_store_parquet(
-    spark: SparkSession, dirs: Sequence[str], files: Sequence[str] | None = None
-) -> DataFrame:
-    """Read ``files`` (default: the ``dirs`` themselves) with the schema
-    the ``dirs``' sidecars recorded at write time — no inference job.
-    A dir without a sidecar (written before sidecars existed, or by
-    hand), or dirs whose sidecars disagree, fall back to plain
-    ``spark.read.parquet`` and its footer inference."""
+def _recorded_schema(dirs: Sequence[str]):
+    """The StructType the ``dirs``' sidecars recorded at write time, or
+    None when a dir has no sidecar (written before sidecars existed, or
+    by hand) or the dirs' sidecars disagree."""
     import json
 
     from pyspark.sql.types import StructType
@@ -151,11 +147,100 @@ def _read_store_parquet(
             with open(os.path.join(d, SCHEMA_SIDECAR)) as fh:
                 recorded.add(fh.read())
     except OSError:
-        recorded.clear()
-    reader = spark.read
-    if len(recorded) == 1:
-        reader = reader.schema(StructType.fromJson(json.loads(recorded.pop())))
+        return None
+    return StructType.fromJson(json.loads(recorded.pop())) if len(recorded) == 1 else None
+
+
+def _read_store_parquet(
+    spark: SparkSession, dirs: Sequence[str], files: Sequence[str] | None = None
+) -> DataFrame:
+    """Read ``files`` (default: the ``dirs`` themselves) with the schema
+    the ``dirs``' sidecars recorded at write time — no inference job.
+    Without one recorded schema this falls back to plain
+    ``spark.read.parquet`` and its footer inference."""
+    schema = _recorded_schema(dirs)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(*(dirs if files is None else files))
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and value nullable — the schema
+    Spark gives a parquet scan, whatever the files declare."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _check_key_value(key_type, value) -> None:
+    """Raise TypeError unless ``value`` is the Python type a ``key_type``
+    column holds (``createDataFrame``'s mapping, exact type: no bool for
+    an integer key, no datetime for a date key), or None."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    accepted = {
+        T.BooleanType: (bool,),
+        T.ByteType: (int,),
+        T.ShortType: (int,),
+        T.IntegerType: (int,),
+        T.LongType: (int,),
+        T.FloatType: (float,),
+        T.DoubleType: (float,),
+        T.DecimalType: (decimal.Decimal,),
+        T.StringType: (str,),
+        T.BinaryType: (bytes, bytearray),
+        T.DateType: (datetime.date,),
+        T.TimestampType: (datetime.datetime,),
+        T.TimestampNTZType: (datetime.datetime,),
+    }.get(type(key_type))
+    if accepted is None:
+        raise TypeError(f"lookup() does not support a {key_type.simpleString()} range key")
+    if value is not None and type(value) not in accepted:
+        raise TypeError(
+            f"lookup() key is {key_type.simpleString()}, got "
+            f"{type(value).__name__} {value!r}: pass the key's own type"
+        )
+
+
+def _key_match(field, arrow_type, internal):
+    """A pyarrow filter for column ``field`` (stored as ``arrow_type``)
+    equal to ``internal``, a value in Spark's internal form
+    (``DataType.toInternal``), matching exactly the rows Spark's ``==``
+    matches; None when no stored value can equal it."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_timestamp(arrow_type):
+        # Spark reads every unit as microseconds: ns (INT96) floored,
+        # ms and s scaled up
+        if arrow_type.unit == "ns":
+            lo = internal * 1000
+            return (field >= pa.scalar(lo, arrow_type)) & (
+                field < pa.scalar(lo + 1000, arrow_type)
+            )
+        q, r = divmod(internal, {"s": 10**6, "ms": 10**3, "us": 1}[arrow_type.unit])
+        return None if r else field == pa.scalar(q, arrow_type)
+    if pa.types.is_floating(arrow_type):
+        # Spark compares a float column in double, and NaN equals NaN
+        if math.isnan(internal):
+            return pc.is_nan(field)
+        return field == pa.scalar(internal, pa.float64())
+    try:
+        return field == pa.scalar(internal, arrow_type)
+    except (pa.ArrowInvalid, OverflowError):
+        return None  # out of the column type's range or scale
 
 
 def _footer_key_stats(path: str, key: str) -> tuple[int, object, object]:
@@ -217,7 +302,8 @@ class ParquetStateStore:
     counts and per-row-group min/max, no Spark job) and written before
     the pointer flips, so a crash mid-write can never expose a
     half-manifest snapshot; ``lookup()`` uses it to prune to the one
-    file covering a key instead of scanning the snapshot. The
+    file covering a key and reads that file's matching rows on the
+    driver, with no Spark job, instead of scanning the snapshot. The
     foreachBatch MERGE bodies are unchanged — layout is entirely the
     store's concern. k is sized to the bytes: one file per
     ``spark.sql.files.maxPartitionBytes`` of the CURRENT snapshot's
@@ -229,11 +315,12 @@ class ParquetStateStore:
     and the files only split once a scan would split them anyway.
 
     **Schema sidecar**: every snapshot dir also holds a
-    ``_schema.json`` with the written frame's schema, which every read
-    (``current``, ``lookup``) passes to ``spark.read.schema`` so no
-    footer-inference job runs. Commit order: parquet files → sidecar →
-    manifest → pointer flip, so a committed snapshot always has its
-    sidecar (and, with ``range_key``, its manifest).
+    ``_schema.json`` with the written frame's schema, which ``current``
+    passes to ``spark.read.schema`` so no footer-inference job runs,
+    and which ``lookup`` gives its driver-side frame. Commit order:
+    parquet files → sidecar → manifest → pointer flip, so a committed
+    snapshot always has its sidecar (and, with ``range_key``, its
+    manifest).
 
     **Single-writer contract**: one committing writer per root (the
     streaming checkpoint already serializes folds). ``flip`` re-reads
@@ -613,38 +700,94 @@ class ParquetStateStore:
         stores or before the first commit)."""
         return self._manifest_at(self._pointed_dir())
 
-    def lookup(self, spark: SparkSession, value) -> DataFrame | None:
-        """Point-read by range key through the manifest: open ONLY the
-        file(s) whose [min_key, max_key] covers ``value`` — at a
-        billion state rows this touches one file, not the snapshot.
-        A file whose manifest entry has no min/max is always read.
-        Requires a ``range_key`` store with at least one commit.
+    def lookup(self, spark: SparkSession, value) -> DataFrame:
+        """Point-read by range key, served on the driver: the rows of
+        the CURRENT snapshot whose range key equals ``value``.
 
-        CURRENT is read once: the manifest and the files come from the
-        same snapshot dir even if a commit flips the pointer meanwhile."""
+        Only the file(s) whose manifest [min_key, max_key] covers
+        ``value`` are opened (a file without min/max always is) — at a
+        billion state rows this touches one file, not the snapshot.
+        ``pyarrow.dataset`` reads them with the key-equality filter
+        pushed down, so row groups are pruned by their stats and memory
+        holds only the matching rows. The result is
+        ``spark.createDataFrame`` of those rows, a ``LocalRelation``:
+        collecting it launches no Spark job and compiles no code. (A
+        Spark scan of the same file costs a job's fixed driver CPU,
+        ~0.1 s, and two codegen compiles per distinct key, as the key
+        literal is inlined into the generated classes.) The schema is the
+        snapshot's sidecar (Spark's inferred one without it), nullable
+        as any parquet scan's, so the frame equals
+        ``current().filter(F.col(key) == value)`` in rows and schema.
+
+        Type contract: ``value`` must be the Python type of the key
+        column (int for integer keys, str, ``datetime.date`` for a
+        date, ``datetime.datetime`` for either timestamp type, …);
+        another type raises TypeError instead of being cast. It is
+        converted as a Spark literal is (``DataType.toInternal``) and
+        compared with the column in Spark's internal form, so LTZ and
+        NTZ timestamps (INT96 files included) and dates match what
+        Spark's ``==`` matches. ``None`` matches nothing.
+
+        The frame holds the rows current when ``lookup()`` was called:
+        a later commit or ``expire_versions`` neither changes nor
+        breaks it. CURRENT is read once, so the manifest, schema and
+        files all come from one snapshot dir even if a commit flips the
+        pointer meanwhile. Requires a ``range_key`` store with at least
+        one commit."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        import pyarrow.types as pat
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         version_dir = self._pointed_dir()
         man = self._manifest_at(version_dir)
         if man is None:
             raise ValueError("lookup() needs a range_key store with a commit")
+        schema = _as_nullable(
+            _recorded_schema([version_dir]) or spark.read.parquet(version_dir).schema
+        )
+        key = man["range_key"]
+        key_type = schema[key].dataType
+        _check_key_value(key_type, value)
 
         def covers(lo, hi) -> bool:
-            if lo is None or hi is None:
-                return True  # no footer stats: the file may hold the key
+            if lo is None or hi is None or value != value:
+                return True  # no footer stats (or NaN): the file may hold the key
             try:
                 return lo <= value <= hi  # native order (ints stay ints in JSON)
             except TypeError:
-                return str(lo) <= str(value) <= str(hi)  # timestamps et al.
+                return str(lo) <= str(value) <= str(hi)  # dates are ISO strings in JSON
 
         paths = [
             os.path.join(version_dir, f["file"])
             for f in man["files"]
-            if covers(f["min_key"], f["max_key"])
+            if value is not None and covers(f["min_key"], f["max_key"])
         ]
-        if not paths:
-            return _read_store_parquet(spark, [version_dir]).filter(F.lit(False))
-        return _read_store_parquet(spark, [version_dir], paths).filter(
-            F.col(man["range_key"]) == value
-        )
+        target = to_arrow_schema(schema)
+        table = target.empty_table()
+        if paths:
+            dataset = ds.dataset(paths, format="parquet")
+            match = _key_match(
+                pc.field(key),
+                dataset.schema.field(key).type,
+                key_type.toInternal(value),
+            )
+            if match is not None:
+                table = dataset.to_table(columns=schema.names, filter=match)
+        # INT96 timestamps read as naive ns: floor them to Spark's µs, and
+        # the cast to Spark's Arrow types takes them as UTC, where
+        # createDataFrame would localize a naive one to the session zone
+        columns = [
+            pc.floor_temporal(c, unit="microsecond")
+            if pat.is_timestamp(c.type) and c.type.unit == "ns"
+            else c
+            for c in table.columns
+        ]
+        table = pa.Table.from_arrays(columns, names=schema.names).cast(target)
+        # one batch: Spark's local Arrow reader stops at a zero-row batch,
+        # dropping the rows of every file scanned after one that had none
+        return spark.createDataFrame(table.combine_chunks(), schema)
 
 
 class ConcurrentWriterError(RuntimeError):

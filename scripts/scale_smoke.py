@@ -2560,20 +2560,20 @@ def state_lookup_smoke(n_rows: int = 10_000_000, n_files: int = 64) -> None:
     streaming_state_point_lookup gate's 100 TB claim, measured): a
     10M-row range-partitioned ParquetStateStore snapshot (64
     manifest-tracked files), then 10 point reads through ``lookup()``
-    — each consults the manifest's per-file [min_key, max_key] and
-    opens ONLY the covering file — verified row-exact against the
-    naive full-snapshot ``current().filter(key=v)`` scan. The honest
-    differentiator, stated precisely: FILE OPENS. The naive filter
-    still gets parquet pushdown (64 footer reads + ~1 row group
-    actually decoded per probe, since the same range layout sorts the
-    key), so the scan-side bytes printed below are the NO-PRUNING
-    upper bound, labeled as such — what the manifest removes for
-    certain is the per-probe touch of every file's footer/stripe
-    planning and the n_files-task fan-out. On local[32] with a
-    page-cache-hot 10M-row snapshot the 32-thread parallel scan even
-    wins wall-clock (10 serial single-file jobs pay 10 job
-    latencies); the manifest's win compounds with state size and
-    file count — at a billion rows across thousands of files, one
+    — each consults the manifest's per-file [min_key, max_key], opens
+    ONLY the covering file and reads its matching rows on the driver
+    (pyarrow, key filter pushed down to the row-group stats), so a
+    probe launches no Spark job — verified row-exact against the
+    naive full-snapshot ``current().filter(key=v)`` scan, which runs
+    one Spark job per probe. The naive filter still gets parquet
+    pushdown (64 footer reads + ~1 row group actually decoded per
+    probe, since the same range layout sorts the key), so the
+    scan-side bytes printed below are the NO-PRUNING upper bound,
+    labeled as such — what the manifest removes for certain is the
+    per-probe touch of every file's footer and the n_files-task
+    fan-out, and the driver-side read removes each probe's job
+    latency. The manifest's win compounds with state size and file
+    count — at a billion rows across thousands of files, one
     file-open per probe vs thousands."""
     import tempfile
 

@@ -132,7 +132,47 @@ def test_sidecar_less_dirs_still_read(spark, tmp_path):
         os.remove(os.path.join(d, SCHEMA_SIDECAR))
     assert sorted(state.current(spark).collect()) == want
     assert sorted(log.current(spark).collect()) == want
-    assert [tuple(r) for r in state.lookup(spark, 7).collect()] == [(7, "7")]
+    found = state.lookup(spark, 7)
+    assert [tuple(r) for r in found.collect()] == [(7, "7")]
+    assert found.schema == state.current(spark).schema
+    assert state.lookup(spark, 1000).collect() == []
+    with pytest.raises(TypeError):
+        state.lookup(spark, "7")
+
+
+def test_lookup_launches_no_job_and_compiles_nothing(spark, tmp_path):
+    """A point read is served on the driver: over distinct keys, building
+    and collecting ``lookup()`` launches no Spark job and compiles no
+    code (a Spark scan inlines the key literal into its generated
+    classes: two compiles per new key)."""
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="k", n_files=4)
+    state.commit(
+        spark.range(200).select(F.col("id").alias("k"), F.col("id").cast("string").alias("s")), 0
+    )
+    state.lookup(spark, 0).collect()  # the schema's one-time row projection
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    keys = [3, 57, 101, 150, 199]
+    rows, jobs = under_group(
+        spark, "lookups",
+        lambda: [tuple(r) for k in keys for r in state.lookup(spark, k).collect()],
+    )
+    assert rows == [(k, str(k)) for k in keys]
+    assert jobs == 0
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+def test_staged_stream_builds_without_jobs(spark, sf_dir):
+    """``_staged_events`` opens the file stream with the schema of the
+    events frame it staged, so once the stage is written, building the
+    stream launches no footer-inference job."""
+    from dwh_spark.plans.streaming import _staged_events
+
+    _staged_events(spark, sf_dir)  # writes the session's one stage
+    (stream, _), jobs = under_group(spark, "staged stream", lambda: _staged_events(spark, sf_dir))
+    assert jobs == 0
+    assert stream.isStreaming
+    assert stream.schema == load_table(spark, sf_dir, "events").schema
 
 
 def test_every_committed_dir_has_its_schema_sidecar(spark, tmp_path):

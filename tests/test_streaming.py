@@ -2,6 +2,7 @@
 checkpoint resume (S5 cursor parity) and watermark lateness handling
 (§2.6 extension)."""
 
+import datetime
 import os
 import shutil
 
@@ -460,12 +461,103 @@ def test_partitioned_store_key_without_footer_stats(spark, tmp_path):
     assert len(man["files"]) > 1
     assert all(f["min_key"] is None and f["max_key"] is None for f in man["files"])
     assert sum(f["n_rows"] for f in man["files"]) == events.count()
+    current = store.current(spark)
     for row in events.orderBy("event_id").limit(3).collect():
         got = sorted(r["event_id"] for r in store.lookup(spark, row["ts"]).collect())
         want = sorted(
             r["event_id"] for r in events.filter(F.col("ts") == row["ts"]).collect()
         )
         assert row["event_id"] in got and got == want
+        # one microsecond off the stored instant matches nothing
+        absent = row["ts"] + datetime.timedelta(microseconds=1)
+        assert_lookup_exact(store, current, "ts", absent, 0)
+    before = events.agg(F.min("ts")).first()[0] - datetime.timedelta(days=1)
+    assert_lookup_exact(store, current, "ts", before, 0)
+    with pytest.raises(TypeError):
+        store.lookup(spark, before.date())
+
+
+def assert_lookup_exact(store, current, key, value, n_rows):
+    """``lookup(value)`` has the rows and the schema of the same filter
+    over the whole current snapshot, and ``n_rows`` of them."""
+    spark = current.sparkSession
+    got, want = store.lookup(spark, value), current.filter(F.col(key) == value)
+    assert got.schema == want.schema
+    rows = sorted(got.collect())
+    assert rows == sorted(want.collect()) and len(rows) == n_rows, (value, rows)
+
+
+_KEYS = {
+    # name: (SQL of the key from id, id -> key value); ids are even, so
+    # an odd id is absent but inside a file's key range
+    "int": ("id", lambda i: i),
+    "string": ("format_string('k%04d', id)", lambda i: f"k{i:04d}"),
+    "date": (
+        "date_add(DATE'2020-01-01', CAST(id AS INT))",
+        lambda i: datetime.date(2020, 1, 1) + datetime.timedelta(days=i),
+    ),
+    "timestamp": (
+        "timestamp_seconds(id * 3600 + 7)",
+        lambda i: datetime.datetime(1970, 1, 1) + datetime.timedelta(hours=i, seconds=7),
+    ),
+    "timestamp_ntz": (
+        "to_timestamp_ntz(from_unixtime(id * 3600 + 7))",
+        lambda i: datetime.datetime(1970, 1, 1) + datetime.timedelta(hours=i, seconds=7),
+    ),
+}
+_WRONG_TYPE = {
+    "int": "2",
+    "string": 2,
+    "date": datetime.datetime(2020, 1, 3),
+    "timestamp": datetime.date(1970, 1, 1),
+    "timestamp_ntz": 7,
+}
+
+
+@pytest.mark.parametrize(
+    "kind, ts_type",
+    [(kind, "INT96") for kind in sorted(_KEYS)] + [("timestamp", "TIMESTAMP_MICROS")],
+)
+def test_lookup_equals_current_filter(spark, tmp_path, kind, ts_type):
+    """lookup(v) gives the rows and schema of current().filter(key == v)
+    for int, string, date and both timestamp keys (LTZ written as INT96
+    and as INT64 micros): a present key, an absent key inside a file's
+    range, a key outside every range; a value of another type raises
+    TypeError."""
+    sql, value_of = _KEYS[kind]
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, ts_type)
+    try:
+        store = ParquetStateStore(str(tmp_path / "state"), range_key="k", n_files=3)
+        store.commit(
+            spark.range(0, 60, 2).select(F.expr(sql).alias("k"), F.col("id").alias("v")), 0
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    current = store.current(spark)
+    assert len(store.manifest()["files"]) == 3
+    for i, n_rows in [(0, 1), (30, 1), (58, 1), (31, 0), (1000, 0)]:
+        assert_lookup_exact(store, current, "k", value_of(i), n_rows)
+    with pytest.raises(TypeError):
+        store.lookup(spark, _WRONG_TYPE[kind])
+
+
+def test_lookup_frame_keeps_its_snapshot(spark, tmp_path):
+    """A lookup frame holds the rows current when lookup() was called: a
+    later commit and the expiry of its snapshot's dir change nothing."""
+    store = ParquetStateStore(str(tmp_path / "state"), range_key="k", n_files=2)
+
+    def frame(v):
+        return spark.range(100).select(F.col("id").alias("k"), F.lit(v).alias("v"))
+
+    store.commit(frame(1), 1)
+    at_v1 = store.lookup(spark, 42)
+    store.commit(frame(2), 2)
+    store.expire_versions(keep_from=2)
+    assert not os.path.exists(store.version_dir(1))
+    assert [tuple(r) for r in at_v1.collect()] == [(42, 1)]
+    assert [tuple(r) for r in store.lookup(spark, 42).collect()] == [(42, 2)]
 
 
 def test_lookup_reads_current_once(spark, tmp_path, monkeypatch):
