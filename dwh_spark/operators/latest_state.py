@@ -34,15 +34,12 @@ def latest_state(df: DataFrame, keys: Sequence[str], order: Sequence[Column]) ->
 
 
 def latest_state_agg(df: DataFrame, keys: Sequence[str], seq: Column) -> DataFrame:
-    """Aggregation form: ``max_by(struct(*), seq)`` per key. One
-    partial-aggregable pass — cheaper than a window when each key has
-    many rows, because map-side combine collapses history before the
-    shuffle."""
-    others = [c for c in df.columns]
-    packed = df.select(*keys, seq.alias("__seq"), F.struct(*others).alias("__row"))
+    """Aggregation form: ``max_by(struct(*), seq)`` per key, unpacked
+    back to ``df``'s columns in ``df``'s order. One partial-aggregable
+    pass — cheaper than a window when each key has many rows, because
+    map-side combine collapses history before the shuffle."""
     return (
-        packed.groupBy(*keys)
-        .agg(F.max_by("__row", "__seq").alias("__row"))
-        .select(*(F.col(f"__row.{c}").alias(c) for c in others if c not in keys), *keys)
-        .select(*others)
+        df.groupBy(*keys)
+        .agg(F.max_by(F.struct(*df.columns), seq).alias("__row"))
+        .select("__row.*")
     )

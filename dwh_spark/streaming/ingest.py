@@ -163,6 +163,27 @@ def _read_store_parquet(
     return reader.parquet(*(dirs if files is None else files))
 
 
+def _data_files(store_dir: str) -> list[os.DirEntry]:
+    """The files of ``store_dir`` a parquet scan reads, by name: Spark
+    skips every name starting with ``_`` or ``.`` (the schema sidecar,
+    the manifest, ``_SUCCESS``, checksum files)."""
+    return sorted(
+        (e for e in os.scandir(store_dir) if not e.name.startswith(("_", "."))),
+        key=lambda e: e.name,
+    )
+
+
+def _data_bytes(store_dir: str) -> int:
+    """Bytes of the files of ``store_dir`` a parquet scan reads."""
+    return sum(e.stat().st_size for e in _data_files(store_dir))
+
+
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes``: the most bytes one scan
+    split reads."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
+
 def _as_nullable(dt):
     """``dt`` with every field, element and value nullable — the schema
     Spark gives a parquet scan, whatever the files declare."""
@@ -313,6 +334,15 @@ class ParquetStateStore:
     tens of ms of CPU whatever the file's size — so a small state is
     one file (``coalesce(1)``: no range exchange, no sampling job)
     and the files only split once a scan would split them anyway.
+
+    **One-task merges**: when the next snapshot is one file (a range
+    store sized to one file, or ``write_partitions=1``) and CURRENT's
+    data files plus the micro-batch fit one
+    ``spark.sql.files.maxPartitionBytes`` split (``_one_task_merge``),
+    the folds coalesce their *inputs* to one partition. An aggregation
+    over a one-partition input plans no Exchange, so the merge is one
+    job, one stage and one task; coalescing only the output would still
+    run the aggregation's map and reduce stages.
 
     **Schema sidecar**: every snapshot dir also holds a
     ``_schema.json`` with the written frame's schema, which ``current``
@@ -534,13 +564,25 @@ class ParquetStateStore:
         version_dir = self._pointed_dir()
         if version_dir is None:
             return self.n_files
-        on_disk = sum(
-            e.stat().st_size
-            for e in os.scandir(version_dir)
-            if not e.name.startswith(("_", "."))  # Spark's rule for what a scan reads
-        )
-        cap = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        return min(self.n_files, max(1, -(-on_disk // cap)))
+        on_disk = _data_bytes(version_dir)
+        return min(self.n_files, max(1, -(-on_disk // _max_partition_bytes(spark))))
+
+    def _one_task_merge(self, batch: DataFrame) -> bool:
+        """Whether merging ``batch`` into this store can run as one task:
+        the next snapshot is one file (``_range_files`` gives 1, or
+        ``write_partitions`` is 1) and the merge's inputs, CURRENT's data
+        files plus the batch, fit one ``spark.sql.files.maxPartitionBytes``
+        split. The batch's size is Spark's own plan estimate: the bytes
+        of the files a file-source micro-batch scans, or the largest long
+        when Spark cannot size the batch, which keeps the split plan."""
+        spark = batch.sparkSession
+        files = self._range_files(spark) if self.range_key is not None else self.write_partitions
+        if files != 1:
+            return False
+        version_dir = self._pointed_dir()
+        on_disk = 0 if version_dir is None else _data_bytes(version_dir)
+        batch_bytes = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return on_disk + batch_bytes <= _max_partition_bytes(spark)
 
     def flip(self, batch_id: int) -> None:
         """Atomically point CURRENT at ``batch_id``'s snapshot — the
@@ -663,15 +705,11 @@ class ParquetStateStore:
         import json
 
         files = []
-        for name in sorted(os.listdir(version_dir)):
-            if name.startswith(("_", ".")):
-                continue  # Spark's own rule for what a scan reads
-            n_rows, lo, hi = _footer_key_stats(
-                os.path.join(version_dir, name), self.range_key
-            )
+        for entry in _data_files(version_dir):
+            n_rows, lo, hi = _footer_key_stats(entry.path, self.range_key)
             if n_rows:
                 files.append(
-                    {"file": name, "n_rows": n_rows, "min_key": lo, "max_key": hi}
+                    {"file": entry.name, "n_rows": n_rows, "min_key": lo, "max_key": hi}
                 )
         manifest = {
             "batch_id": batch_id,
@@ -1268,6 +1306,14 @@ def run_incremental_compaction(
     seq is higher — replay order across batches cannot change the
     outcome, because per-key max(seq) is associative).
 
+    Each merge is one aggregation over CURRENT ∪ batch. When the store
+    writes one file and those inputs fit one
+    ``spark.sql.files.maxPartitionBytes`` split
+    (``ParquetStateStore._one_task_merge``), the union is coalesced to
+    one partition first: no Exchange, so the merge runs as one job, one
+    stage and one task. Otherwise the plan is the aggregation's shuffle
+    and the store's range or coalesced write.
+
     Runs with ``Trigger.AvailableNow`` and blocks until the backlog is
     drained. Re-invoking with the same checkpoint resumes at the
     cursor (S5): already-committed files are never reprocessed.
@@ -1289,8 +1335,11 @@ def run_incremental_compaction(
             return
         # one aggregation over state ∪ batch: max_by is associative, so
         # pre-aggregating the batch only adds an exchange and a job
+        one_task = store._one_task_merge(batch_df)
         cur = store.current(spark)
         rows = batch_df if cur is None else cur.unionByName(batch_df)
+        if one_task:
+            rows = rows.coalesce(1)  # one partition in: no Exchange
         store.commit(latest_state_agg(rows, keys, seq), batch_id)
 
     q = (
@@ -1320,6 +1369,13 @@ def run_incremental_rollup(
     decimal/long sums — never float): additivity makes batch splits
     invisible, exactness makes merge order invisible, and the batch-id
     high-water guard makes replays exactly-once.
+
+    When the store writes one file and CURRENT plus the batch fit one
+    ``spark.sql.files.maxPartitionBytes`` split
+    (``ParquetStateStore._one_task_merge``), the batch and then
+    CURRENT ∪ deltas are coalesced to one partition before each
+    aggregation: neither plans an Exchange, so the merge runs as one
+    job, one stage and one task. Otherwise each aggregation shuffles.
     """
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1327,17 +1383,20 @@ def run_incremental_rollup(
         lc = store.last_committed()
         if lc is not None and batch_id <= lc:
             return
+        one_task = store._one_task_merge(batch_df)
+        if one_task:
+            batch_df = batch_df.coalesce(1)  # one partition in: no Exchange
         delta = batch_df.groupBy(*keys).agg(
             *[v.alias(name) for name, v in measures.items()]
         )
         cur = store.current(spark)
-        merged = (
-            delta
-            if cur is None
-            else cur.unionByName(delta)
-            .groupBy(*keys)
-            .agg(*[F.sum(name).alias(name) for name in measures])
-        )
+        if cur is None:
+            merged = delta
+        else:
+            rows = cur.unionByName(delta)
+            if one_task:
+                rows = rows.coalesce(1)
+            merged = rows.groupBy(*keys).agg(*[F.sum(name).alias(name) for name in measures])
         store.commit(merged, batch_id)
 
     q = (

@@ -18,6 +18,7 @@ from dwh_spark.streaming.ingest import (
     SCHEMA_SIDECAR,
     ParquetAppendLog,
     ParquetStateStore,
+    _data_bytes,
     _read_store_parquet,
     run_incremental_compaction,
     run_incremental_rollup,
@@ -76,17 +77,14 @@ def test_store_reads_and_commits_launch_no_bookkeeping_jobs(
     ).parquet(inbox)
     fold()  # second batch merges into committed state
     roll()
-    fold_group, rollup_group = stream_groups[2:]
-    fold_jobs, rollup_jobs = n_jobs(spark, fold_group), n_jobs(spark, rollup_group)
-    # measured with sidecar reads, footer manifests, one aggregation per
-    # fold and a one-file snapshot (Spark 4.1, 8 shuffle partitions): a
-    # store read's inference job, the manifest's re-scan, a second
-    # aggregation or a range write's sampling job would add to these
-    assert fold_jobs <= 2, fold_jobs
-    # 5 scan tasks (the 4-file first snapshot and the batch file), one
-    # for the aggregation and the one-file write
-    assert n_tasks(spark, fold_group) <= 6, n_tasks(spark, fold_group)
-    assert rollup_jobs <= 3, rollup_jobs
+    # both merges write one file and their inputs (the 4-file first
+    # snapshot or the one-file rollup, plus the batch file) fit one
+    # maxPartitionBytes split, so each reads its inputs as one partition
+    # and aggregates and writes in that one task: a store read's
+    # inference job, the manifest's re-scan, an Exchange (its map stage
+    # and reduce stage) or a range write's sampling job would add to these
+    for group in stream_groups[2:]:
+        assert (n_jobs(spark, group), n_tasks(spark, group)) == (1, 1)
 
     log.append(events, 0)
     key = state.manifest()["files"][0]["min_key"]
@@ -225,12 +223,6 @@ def test_df_cap_record_reads_its_segment_without_jobs(spark, tmp_path):
     assert sorted(stats.current(spark).collect()) == sorted(counts.collect())
 
 
-def _data_bytes(version_dir):
-    return sum(
-        e.stat().st_size for e in os.scandir(version_dir) if not e.name.startswith(("_", "."))
-    )
-
-
 def test_range_snapshot_files_follow_snapshot_bytes(spark, sf_dir, tmp_path):
     """The first snapshot has ``n_files`` range files; each later one has
     one per ``spark.sql.files.maxPartitionBytes`` of the snapshot before
@@ -271,23 +263,70 @@ def test_range_snapshot_files_follow_snapshot_bytes(spark, sf_dir, tmp_path):
     assert spark.conf.get(conf) == prev
 
 
-def test_fold_equals_latest_state_replay(spark, sf_dir, tmp_path):
-    """Folding three micro-batches with one aggregation over state ∪ batch
-    leaves exactly the rows the one-shot ``latest_state_agg`` replay of
-    all events keeps."""
+@pytest.mark.parametrize("path", ["one_task", "split"])
+def test_merges_equal_replay_on_both_paths(spark, sf_dir, tmp_path, stream_groups, path):
+    """Folding and rolling up three micro-batches gives the one-shot
+    replay over all of them, whether each merge reads its inputs as one
+    partition (they fit one ``maxPartitionBytes`` split) or keeps the
+    split plan (the conf lowered below the inputs' bytes)."""
     events = load_table(spark, sf_dir, "events")
-    inbox = str(tmp_path / "inbox")
+    inbox = str(tmp_path / "in box")
     for i in range(3):
         events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(inbox)
-    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=4)
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=2)
+    rollup = ParquetStateStore(str(tmp_path / "rollup"), write_partitions=1)
     seq = F.struct("ts", "event_id")
-    run_incremental_compaction(
-        stream_events(spark, inbox, events.schema), state,
-        str(tmp_path / "ckpt"), ["user_id"], seq,
+    value = F.col("value").cast("decimal(18,2)")
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    try:
+        if path == "split":
+            spark.conf.set(conf, "1k")
+        run_incremental_compaction(
+            stream_events(spark, inbox, events.schema), state,
+            str(tmp_path / "ckpt_fold"), ["user_id"], seq,
+        )
+        run_incremental_rollup(
+            stream_events(spark, inbox, events.schema).select("event_type", value.alias("v")),
+            rollup, str(tmp_path / "ckpt_rollup"), ["event_type"],
+            {"n": F.count("*"), "sum_dec": F.sum("v")},
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    assert spark.conf.get(conf) == prev
+
+    replay = latest_state_agg(events, ["user_id"], seq)
+    assert [(f.name, f.dataType) for f in replay.schema] == [
+        (f.name, f.dataType) for f in events.schema
+    ]
+    assert state.last_committed() == rollup.last_committed() == 2
+    assert sorted(state.current(spark).collect()) == sorted(replay.collect())
+    assert sorted(rollup.current(spark).collect()) == sorted(
+        events.groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.sum(value).alias("sum_dec"))
+        .collect()
     )
-    assert state.last_committed() == 2
-    assert sorted(state.current(spark).collect()) == sorted(
-        latest_state_agg(events, ["user_id"], seq).collect()
-    )
+    # one task per rollup batch on the one-task path; the split plan's
+    # Exchange adds a map and a reduce stage to every batch
+    rollup_tasks = n_tasks(spark, stream_groups[1])
+    assert (rollup_tasks == 3) == (path == "one_task"), rollup_tasks
+
+
+def test_one_task_merge_needs_a_sized_batch_and_one_file(spark, tmp_path):
+    """A merge takes the one-task plan only when its snapshot is one file
+    and Spark can size the batch: a file scan is sized by its files'
+    bytes (a path with a space included), a frame over an RDD is not
+    sized at all and keeps the split plan."""
+    inbox = str(tmp_path / "in box")
+    spark.range(100).write.parquet(inbox)
+    files = spark.read.parquet(inbox)
+    one_file = ParquetStateStore(str(tmp_path / "one"), write_partitions=1)
+    assert one_file._one_task_merge(files)
+    assert not one_file._one_task_merge(spark.createDataFrame(files.rdd, files.schema))
+    assert not ParquetStateStore(str(tmp_path / "any"))._one_task_merge(files)
+    ranged = ParquetStateStore(str(tmp_path / "ranged"), range_key="id", n_files=2)
+    assert not ranged._one_task_merge(files)  # the first snapshot has n_files files
+    ranged.commit(files, 0)
+    assert ranged._one_task_merge(files)
