@@ -184,6 +184,22 @@ def _max_partition_bytes(spark: SparkSession) -> int:
     return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
+def _split_bytes(spark: SparkSession, data_bytes: int, n_files: int) -> int:
+    """The split size Spark's file scan picks for ``n_files`` files of
+    ``data_bytes`` bytes (``FilePartition.maxSplitBytes``): the bytes,
+    each file padded by ``spark.sql.files.openCostInBytes``, spread over
+    the scan's minimum partition count (``spark.sql.files.minPartitionNum``,
+    else the leaf-node parallelism), at least the open cost and at most
+    ``spark.sql.files.maxPartitionBytes``."""
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    parts = min_parts.get() if min_parts.isDefined() else jspark.leafNodeDefaultParallelism()
+    per_core = (data_bytes + n_files * open_cost) // parts
+    return min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+
+
 def _as_nullable(dt):
     """``dt`` with every field, element and value nullable — the schema
     Spark gives a parquet scan, whatever the files declare."""
@@ -337,12 +353,15 @@ class ParquetStateStore:
 
     **One-task merges**: when the next snapshot is one file (a range
     store sized to one file, or ``write_partitions=1``) and CURRENT's
-    data files plus the micro-batch fit one
-    ``spark.sql.files.maxPartitionBytes`` split (``_one_task_merge``),
-    the folds coalesce their *inputs* to one partition. An aggregation
-    over a one-partition input plans no Exchange, so the merge is one
-    job, one stage and one task; coalescing only the output would still
-    run the aggregation's map and reduce stages.
+    data files plus the micro-batch fit one split of the size Spark's
+    file scan picks for them (``_split_bytes``: about
+    ``spark.sql.files.openCostInBytes``, 4 MB, on a multi-core session,
+    so a state Spark would scan in parallel keeps the parallel plan;
+    ``_one_task_merge``), the folds coalesce their *inputs* to one
+    partition. An aggregation over a one-partition input plans no
+    Exchange, so the merge is one job, one stage and one task;
+    coalescing only the output would still run the aggregation's map
+    and reduce stages.
 
     **Schema sidecar**: every snapshot dir also holds a
     ``_schema.json`` with the written frame's schema, which ``current``
@@ -562,27 +581,40 @@ class ParquetStateStore:
         data files, capped at ``n_files`` (``n_files`` before the first
         commit)."""
         version_dir = self._pointed_dir()
-        if version_dir is None:
+        on_disk = None if version_dir is None else _data_bytes(version_dir)
+        return self._files_after(spark, on_disk)
+
+    def _files_after(self, spark: SparkSession, on_disk: int | None) -> int:
+        """Range files for a snapshot written after one of ``on_disk``
+        data bytes (None: no snapshot yet)."""
+        if on_disk is None:
             return self.n_files
-        on_disk = _data_bytes(version_dir)
         return min(self.n_files, max(1, -(-on_disk // _max_partition_bytes(spark))))
 
     def _one_task_merge(self, batch: DataFrame) -> bool:
         """Whether merging ``batch`` into this store can run as one task:
         the next snapshot is one file (``_range_files`` gives 1, or
         ``write_partitions`` is 1) and the merge's inputs, CURRENT's data
-        files plus the batch, fit one ``spark.sql.files.maxPartitionBytes``
-        split. The batch's size is Spark's own plan estimate: the bytes
-        of the files a file-source micro-batch scans, or the largest long
-        when Spark cannot size the batch, which keeps the split plan."""
+        files plus the batch, fit one split of the size Spark's file scan
+        would pick for them (``_split_bytes``). Past that size Spark
+        scans them in parallel, and so does the merge. The batch's size
+        is Spark's own plan estimate: the bytes of the files a
+        file-source micro-batch scans (counted as one file, which can
+        only shrink the split), or the largest long when Spark cannot
+        size the batch, which keeps the split plan."""
         spark = batch.sparkSession
-        files = self._range_files(spark) if self.range_key is not None else self.write_partitions
+        version_dir = self._pointed_dir()
+        cur = [] if version_dir is None else [e.stat().st_size for e in _data_files(version_dir)]
+        on_disk = sum(cur)
+        if self.range_key is not None:
+            files = self._files_after(spark, None if version_dir is None else on_disk)
+        else:
+            files = self.write_partitions
         if files != 1:
             return False
-        version_dir = self._pointed_dir()
-        on_disk = 0 if version_dir is None else _data_bytes(version_dir)
         batch_bytes = batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return on_disk + batch_bytes <= _max_partition_bytes(spark)
+        in_bytes = on_disk + batch_bytes
+        return in_bytes <= _split_bytes(spark, in_bytes, len(cur) + 1)
 
     def flip(self, batch_id: int) -> None:
         """Atomically point CURRENT at ``batch_id``'s snapshot — the
@@ -1307,12 +1339,11 @@ def run_incremental_compaction(
     outcome, because per-key max(seq) is associative).
 
     Each merge is one aggregation over CURRENT ∪ batch. When the store
-    writes one file and those inputs fit one
-    ``spark.sql.files.maxPartitionBytes`` split
-    (``ParquetStateStore._one_task_merge``), the union is coalesced to
-    one partition first: no Exchange, so the merge runs as one job, one
-    stage and one task. Otherwise the plan is the aggregation's shuffle
-    and the store's range or coalesced write.
+    writes one file and those inputs fit one split of the size Spark's
+    file scan picks for them (``ParquetStateStore._one_task_merge``),
+    the union is coalesced to one partition first: no Exchange, so the
+    merge runs as one job, one stage and one task. Otherwise the plan is
+    the aggregation's shuffle and the store's range or coalesced write.
 
     Runs with ``Trigger.AvailableNow`` and blocks until the backlog is
     drained. Re-invoking with the same checkpoint resumes at the
@@ -1371,7 +1402,7 @@ def run_incremental_rollup(
     high-water guard makes replays exactly-once.
 
     When the store writes one file and CURRENT plus the batch fit one
-    ``spark.sql.files.maxPartitionBytes`` split
+    split of the size Spark's file scan picks for them
     (``ParquetStateStore._one_task_merge``), the batch and then
     CURRENT ∪ deltas are coalesced to one partition before each
     aggregation: neither plans an Exchange, so the merge runs as one

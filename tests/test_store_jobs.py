@@ -267,15 +267,16 @@ def test_range_snapshot_files_follow_snapshot_bytes(spark, sf_dir, tmp_path):
 def test_merges_equal_replay_on_both_paths(spark, sf_dir, tmp_path, stream_groups, path):
     """Folding and rolling up three micro-batches gives the one-shot
     replay over all of them, whether each merge reads its inputs as one
-    partition (they fit one ``maxPartitionBytes`` split) or keeps the
-    split plan (the conf lowered below the inputs' bytes)."""
+    partition (they fit one scan split) or keeps the split plan
+    (``maxPartitionBytes`` lowered below the inputs' bytes). Both stores
+    write one file, so the split size alone picks the path."""
     events = load_table(spark, sf_dir, "events")
     inbox = str(tmp_path / "in box")
     for i in range(3):
         events.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(inbox)
-    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=2)
+    state = ParquetStateStore(str(tmp_path / "state"), range_key="user_id", n_files=1)
     rollup = ParquetStateStore(str(tmp_path / "rollup"), write_partitions=1)
     seq = F.struct("ts", "event_id")
     value = F.col("value").cast("decimal(18,2)")
@@ -308,17 +309,24 @@ def test_merges_equal_replay_on_both_paths(spark, sf_dir, tmp_path, stream_group
         .agg(F.count("*").alias("n"), F.sum(value).alias("sum_dec"))
         .collect()
     )
-    # one task per rollup batch on the one-task path; the split plan's
-    # Exchange adds a map and a reduce stage to every batch
-    rollup_tasks = n_tasks(spark, stream_groups[1])
-    assert (rollup_tasks == 3) == (path == "one_task"), rollup_tasks
+    # one job and one task per batch on the one-task path; the split
+    # plan's Exchange runs every batch as an AQE map-stage job and a
+    # reduce job, over more than one task
+    for group in stream_groups:
+        jobs, tasks = n_jobs(spark, group), n_tasks(spark, group)
+        if path == "one_task":
+            assert (jobs, tasks) == (3, 3)
+        else:
+            assert jobs >= 6 and tasks > 6, (jobs, tasks)
 
 
 def test_one_task_merge_needs_a_sized_batch_and_one_file(spark, tmp_path):
-    """A merge takes the one-task plan only when its snapshot is one file
-    and Spark can size the batch: a file scan is sized by its files'
-    bytes (a path with a space included), a frame over an RDD is not
-    sized at all and keeps the split plan."""
+    """A merge takes the one-task plan only when its snapshot is one file,
+    Spark can size the batch and the inputs fit the split Spark's scan
+    would pick: a file scan is sized by its files' bytes (a path with a
+    space included), a frame over an RDD is not sized at all and keeps
+    the split plan, and so do inputs past ``openCostInBytes`` that Spark
+    would scan over several partitions."""
     inbox = str(tmp_path / "in box")
     spark.range(100).write.parquet(inbox)
     files = spark.read.parquet(inbox)
@@ -330,3 +338,24 @@ def test_one_task_merge_needs_a_sized_batch_and_one_file(spark, tmp_path):
     assert not ranged._one_task_merge(files)  # the first snapshot has n_files files
     ranged.commit(files, 0)
     assert ranged._one_task_merge(files)
+
+    size = files._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    confs = {
+        "spark.sql.files.openCostInBytes": str(size // 2),
+        "spark.sql.files.minPartitionNum": "4",
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        # over 4 partitions the split is the open cost, half the batch
+        assert not one_file._one_task_merge(files)
+        # over one partition the split is all the bytes (under maxPartitionBytes)
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
+        assert one_file._one_task_merge(files)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
