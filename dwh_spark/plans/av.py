@@ -33,6 +33,7 @@ from dwh_spark.multimodal.av import (
 from dwh_spark.plans.registry import query
 from dwh_spark.session import persist_slot, scratch_dir
 from dwh_spark.sources.catalog import load_table
+from dwh_spark.sources.media_fixtures import doc_ids, md5_clip, md5_grid, synthesize
 
 _RATES = (8000, 16000, 22050, 44100, 48000)
 _RATE_SQL = (
@@ -179,31 +180,20 @@ def av_video_real_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # imgs_real_pixel_stats: the container-walk proof doesn't need
     # every document, and the single-row-group fixture would serialize
     # the codec work on one core
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 < 2)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 < 2)
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 5 + 3
-                frames = np.empty((n, 12, 16, 3), np.uint8)
-                for f in range(n):
-                    frames[f] = (d * 31 + f * 17) % 256
-                out.append((d, n, codecs.avi_encode(frames)))
-            yield pd.DataFrame(out, columns=["doc_id", "n_frames", "content"])
+        n = d % 5 + 3
+        frames = np.empty((n, 12, 16, 3), np.uint8)
+        for f in range(n):
+            frames[f] = (d * 31 + f * 17) % 256
+        yield d, n, codecs.avi_encode(frames)
 
-    vids = docs.mapInPandas(gen, "doc_id long, n_frames long, content binary")
+    vids = synthesize(docs, rows, "doc_id long, n_frames long, content binary")
     sampled = sample_frames(vids, every=2)
     return decode_avi_frame_stats(sampled)
 
@@ -229,31 +219,20 @@ def av_video_mjpeg_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to be right for the hash to match."""
     from dwh_spark.multimodal.av import decode_avi_frame_stats
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 4)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 4)
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 4 + 2
-                frames = np.empty((n, 12, 16, 3), np.uint8)
-                for f in range(n):
-                    frames[f] = (d * 29 + f * 23) % 256
-                out.append((d, n, codecs.avi_encode_mjpeg(frames, quality=100)))
-            yield pd.DataFrame(out, columns=["doc_id", "n_frames", "content"])
+        n = d % 4 + 2
+        frames = np.empty((n, 12, 16, 3), np.uint8)
+        for f in range(n):
+            frames[f] = (d * 29 + f * 23) % 256
+        yield d, n, codecs.avi_encode_mjpeg(frames, quality=100)
 
-    vids = docs.mapInPandas(gen, "doc_id long, n_frames long, content binary")
+    vids = synthesize(docs, rows, "doc_id long, n_frames long, content binary")
     sampled = sample_frames(vids, every=1)
     return decode_avi_frame_stats(sampled)
 
@@ -296,36 +275,23 @@ def av_audio_chunk_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded IEEE ops, identical in both engines."""
     import numpy as np  # noqa: F401 (imported in workers below)
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 < 2)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 < 2)
 
-    def gen(batches):
+    def rows(d):
         import struct as _struct
 
         import numpy as _np
-        import pandas as _pd
 
-        def wav(doc_id: int, n: int) -> bytes:
-            i = _np.arange(n, dtype=_np.int64)
-            pcm = ((doc_id * 7 + i * 13) % 2048 - 1024).astype("<i2").tobytes()
-            hdr = (
-                b"RIFF" + _struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-                + b"fmt " + _struct.pack("<IHHIIHH", 16, 1, 1, 1000, 2000, 2, 16)
-                + b"data" + _struct.pack("<I", len(pcm))
-            )
-            return hdr + pcm
+        i = _np.arange(2000 + d % 5 * 400, dtype=_np.int64)
+        pcm = ((d * 7 + i * 13) % 2048 - 1024).astype("<i2").tobytes()
+        hdr = (
+            b"RIFF" + _struct.pack("<I", 36 + len(pcm)) + b"WAVE"
+            + b"fmt " + _struct.pack("<IHHIIHH", 16, 1, 1, 1000, 2000, 2, 16)
+            + b"data" + _struct.pack("<I", len(pcm))
+        )
+        yield d, hdr + pcm
 
-        for pdf in batches:
-            rows = [
-                (int(d), wav(int(d), 2000 + int(d) % 5 * 400)) for d in pdf["doc_id"]
-            ]
-            yield _pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    audio = docs.mapInPandas(gen, "doc_id long, content binary")
+    audio = synthesize(docs, rows, "doc_id long, content binary")
     parsed = audio.select(
         "doc_id", "content", parse_wav_header(F.col("content")).alias("hdr")
     ).select(
@@ -414,42 +380,29 @@ def av_audio_g711_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer SQL from the same byte arithmetic, so the container walk,
     tag dispatch, complement/xor, segment unpack, and sign handling
     all have to agree sample-exactly."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 6)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 6)
 
-    def gen(batches):
+    def rows(d):
+        import struct as _struct
+
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import audio as _audio_mod
 
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 400 + (d % 5) * 100
-                i = _np.arange(n, dtype=_np.int64)
-                payload = ((d * 7 + i * 13) % 256).astype(_np.uint8).tobytes()
-                codec = "ulaw" if d % 2 == 0 else "alaw"
-                # wrap the raw companded bytes in a real WAV container
-                import struct as _struct
+        n = 400 + (d % 5) * 100
+        i = _np.arange(n, dtype=_np.int64)
+        payload = ((d * 7 + i * 13) % 256).astype(_np.uint8).tobytes()
+        codec = "ulaw" if d % 2 == 0 else "alaw"
+        # wrap the raw companded bytes in a real WAV container
+        tag = _audio_mod.WAVE_MULAW if codec == "ulaw" else _audio_mod.WAVE_ALAW
+        wav = (
+            b"RIFF" + _struct.pack("<I", 36 + n) + b"WAVE"
+            + b"fmt " + _struct.pack("<IHHIIHH", 16, tag, 1, 8000, 8000, 1, 8)
+            + b"data" + _struct.pack("<I", n) + payload
+        )
+        yield d, codec, wav
 
-                tag = (
-                    _audio_mod.WAVE_MULAW if codec == "ulaw" else _audio_mod.WAVE_ALAW
-                )
-                wav = (
-                    b"RIFF" + _struct.pack("<I", 36 + n) + b"WAVE"
-                    + b"fmt " + _struct.pack("<IHHIIHH", 16, tag, 1, 8000, 8000, 1, 8)
-                    + b"data" + _struct.pack("<I", n) + payload
-                )
-                rows.append((d, codec, wav))
-            yield _pd.DataFrame(rows, columns=["doc_id", "codec", "content"])
-
-    audio = docs.mapInPandas(gen, "doc_id long, codec string, content binary")
+    audio = synthesize(docs, rows, "doc_id long, codec string, content binary")
 
     def decode(batches):
         import pandas as _pd
@@ -534,40 +487,28 @@ def av_audio_adpcm_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup, magnitude accumulation, clamping, and index adjustment
     per sample — so the two engines must agree on every one of the
     401 sequential states per doc, not just on aggregate shape."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 9)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 9)
 
-    def gen(batches):
+    def rows(d):
         import struct as _struct
 
-        import pandas as _pd
+        pred0 = (d * 31) % 4096 - 2048
+        idx0 = d % 89
+        nibs = [(d * 7 + i * 13) % 16 for i in range(1, 401)]
+        body = bytearray(_struct.pack("<hBB", pred0, idx0, 0))
+        for lo, hi in zip(nibs[::2], nibs[1::2]):
+            body.append(lo | (hi << 4))
+        block_align = len(body)  # 4 + 200
+        wav = (
+            b"RIFF" + _struct.pack("<I", 36 + len(body)) + b"WAVE"
+            + b"fmt " + _struct.pack(
+                "<IHHIIHH", 16, 0x0011, 1, 8000, 4055, block_align, 4
+            )
+            + b"data" + _struct.pack("<I", len(body)) + bytes(body)
+        )
+        yield d, wav
 
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                pred0 = (d * 31) % 4096 - 2048
-                idx0 = d % 89
-                nibs = [(d * 7 + i * 13) % 16 for i in range(1, 401)]
-                body = bytearray(_struct.pack("<hBB", pred0, idx0, 0))
-                for lo, hi in zip(nibs[::2], nibs[1::2]):
-                    body.append(lo | (hi << 4))
-                block_align = len(body)  # 4 + 200
-                wav = (
-                    b"RIFF" + _struct.pack("<I", 36 + len(body)) + b"WAVE"
-                    + b"fmt " + _struct.pack(
-                        "<IHHIIHH", 16, 0x0011, 1, 8000, 4055, block_align, 4
-                    )
-                    + b"data" + _struct.pack("<I", len(body)) + bytes(body)
-                )
-                rows.append((d, wav))
-            yield _pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    audio = docs.mapInPandas(gen, "doc_id long, content binary")
+    audio = synthesize(docs, rows, "doc_id long, content binary")
 
     def decode(batches):
         import pandas as _pd
@@ -629,33 +570,20 @@ def av_audio_flac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins exact per-doc aggregates from the generation
     arithmetic alone; a single wrong residual, warmup sample, or
     predictor coefficient breaks the sum."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 1)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 1)
 
-    def gen(batches):
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import flac as _flac
 
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 3000 + (d % 4) * 1000
-                i = _np.arange(n, dtype=_np.int64)
-                s = (d * 7 + i * 13) % 2048 - 1024
-                blob = _flac.flac_encode(
-                    s, rate=8000, block_size=2048, fixed_order=d % 3
-                )
-                rows.append((d, f"fixed{d % 3}", blob))
-            yield _pd.DataFrame(rows, columns=["doc_id", "predictor", "content"])
+        n = 3000 + (d % 4) * 1000
+        i = _np.arange(n, dtype=_np.int64)
+        s = (d * 7 + i * 13) % 2048 - 1024
+        blob = _flac.flac_encode(s, rate=8000, block_size=2048, fixed_order=d % 3)
+        yield d, f"fixed{d % 3}", blob
 
-    audio = docs.mapInPandas(gen, "doc_id long, predictor string, content binary")
+    audio = synthesize(docs, rows, "doc_id long, predictor string, content binary")
 
     def decode(batches):
         import pandas as _pd
@@ -749,11 +677,7 @@ def av_audio_fp_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     energy, and blocking all have to agree."""
     from dwh_spark.multimodal.audio_fp import audio_fp_near_dup_pairs
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir)  # single-row-group fixture would pin one core
 
     audio = _audio_fp_fixture(docs, base=True, variants=True)
     pairs = audio_fp_near_dup_pairs(audio, key="audio_id", max_hamming=3)
@@ -827,11 +751,7 @@ def av_video_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree."""
     from dwh_spark.multimodal.perceptual import video_perceptual_near_dups
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir)  # single-row-group fixture would pin one core
 
     vids = _video_phash_fixture(docs, base=True, variants=True)
     pairs = video_perceptual_near_dups(vids, max_hamming=3, min_frames=3)
@@ -853,42 +773,20 @@ def _audio_fp_fixture(docs, base: bool, variants: bool):
     one-window edit (id +2,000,000, %10==6). All arithmetic is
     SQL-derivable so the oracles never decode."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
+    def rows(d):
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        s = md5_clip(f"{d}", range(57))
+        if base:
+            yield d, wav_encode(s, 1000)
+        if variants and d % 10 == 4:
+            yield d + 1000000, wav_encode(s * 2, 1000)
+        if variants and d % 10 == 6:
+            t = s.copy()
+            t[3 * 64 : 4 * 64] = 500
+            yield d + 2000000, wav_encode(t, 1000)
 
-        def clip(d: int) -> "_np.ndarray":
-            wins = []
-            for w in range(57):
-                a = (
-                    int(_hashlib.md5(f"{d}:{w}".encode()).hexdigest()[:4], 16)
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d)
-                if base:
-                    rows.append((d, wav_encode(s, 1000)))
-                if variants and d % 10 == 4:
-                    rows.append((d + 1000000, wav_encode(s * 2, 1000)))
-                if variants and d % 10 == 6:
-                    t = s.copy()
-                    t[3 * 64 : 4 * 64] = 500
-                    rows.append((d + 2000000, wav_encode(t, 1000)))
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 def _video_phash_fixture(docs, base: bool, variants: bool):
@@ -898,53 +796,28 @@ def _video_phash_fixture(docs, base: bool, variants: bool):
     (id +1,000,000, doc_id%10==4) and a copy whose frame 2 has one
     cell flipped (id +2,000,000, %10==6)."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int, flip: bool) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
-
-        def video(b: int, edit: bool, scale: int) -> bytes:
-            frames = _np.stack(
-                [grid(b, f, flip=edit and f == 2) for f in range(4)]
-            )
+        def video(edit: bool, scale: int) -> bytes:
+            frames = _np.stack([
+                md5_grid(f"{d}:{f}", flip=d if edit and f == 2 else None)
+                for f in range(4)
+            ])
             if scale > 1:
                 frames = frames.repeat(scale, axis=1).repeat(scale, axis=2)
             return codecs.avi_encode(frames)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    out.append((d, 4, video(d, False, 1)))
-                if variants and d % 10 == 4:
-                    out.append((d + 1000000, 4, video(d, False, 2)))
-                if variants and d % 10 == 6:
-                    out.append((d + 2000000, 4, video(d, True, 1)))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
+        if base:
+            yield d, 4, video(False, 1)
+        if variants and d % 10 == 4:
+            yield d + 1000000, 4, video(False, 2)
+        if variants and d % 10 == 6:
+            yield d + 2000000, 4, video(True, 1)
 
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 @query(
@@ -1006,11 +879,7 @@ def av_audio_fp_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFram
         audio_fp_incremental_ingest,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = audio_fp_frame(_audio_fp_fixture(docs, base=True, variants=False))
     batch = _audio_fp_fixture(docs, base=False, variants=True)
     matches = audio_fp_incremental_ingest(index, batch, max_hamming=3)
@@ -1082,11 +951,7 @@ def av_video_phash_incremental_ingest(
         video_perceptual_incremental_ingest,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = video_dhash_frames(_video_phash_fixture(docs, base=True, variants=False))
     batch = _video_phash_fixture(docs, base=False, variants=True)
     matches = video_perceptual_incremental_ingest(
@@ -1113,41 +978,21 @@ def _audio_offset_fixture(docs, base: bool, variants: bool):
     reaches the oracle because scaling every energy by the same
     constant preserves every comparison."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        s = md5_clip(f"off:{d}", range(57))
+        if base:
+            yield d, wav_encode(s, 1000)
+        if variants and d % 10 == 3:
+            yield d + 3000000, wav_encode(s[8 * 64:], 1000)
+        if variants and d % 10 == 7:
+            doubled = (s[: 49 * 64].astype(_np.int64) * 2).astype(_np.int16)
+            yield d + 1000000, wav_encode(doubled, 1000)
 
-        def clip(d: int) -> "_np.ndarray":
-            wins = []
-            for w in range(57):
-                a = (
-                    int(_hashlib.md5(f"off:{d}:{w}".encode()).hexdigest()[:4], 16)
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d)
-                if base:
-                    rows.append((d, wav_encode(s, 1000)))
-                if variants and d % 10 == 3:
-                    rows.append((d + 3000000, wav_encode(s[8 * 64:], 1000)))
-                if variants and d % 10 == 7:
-                    doubled = (s[: 49 * 64].astype(_np.int64) * 2).astype(_np.int16)
-                    rows.append((d + 1000000, wav_encode(doubled, 1000)))
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 @query(
@@ -1218,11 +1063,7 @@ def av_audio_fp_offset_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id_a, id_b, offset) rows."""
     from dwh_spark.multimodal.audio_fp import audio_offset_near_dup_pairs
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_offset_fixture(docs, base=True, variants=True)
     return audio_offset_near_dup_pairs(audio, min_matches=5).select(
         "id_a",
@@ -1243,54 +1084,28 @@ def _video_offset_fixture(docs, base: bool, variants: bool):
     edited frame still matches at hamming ≤ 3 and shows up in
     total_hamming instead)."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int, flip: bool) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"voff:{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
-
-        def video(b: int, head_drop: bool, edit: bool):
-            frames = [grid(b, f, flip=edit and f == 2) for f in range(5)]
+        def video(head_drop: bool, edit: bool):
+            frames = [
+                md5_grid(f"voff:{d}:{f}", flip=d if edit and f == 2 else None)
+                for f in range(5)
+            ]
             if head_drop:
                 frames = frames[1:]
-            return codecs.avi_encode(_np.stack(frames)), len(frames)
+            return len(frames), codecs.avi_encode(_np.stack(frames))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    v, n = video(d, False, False)
-                    out.append((d, n, v))
-                if variants and d % 10 == 3:
-                    v, n = video(d, True, False)
-                    out.append((d + 3000000, n, v))
-                if variants and d % 10 == 7:
-                    v, n = video(d, True, True)
-                    out.append((d + 1000000, n, v))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
+        if base:
+            yield d, *video(False, False)
+        if variants and d % 10 == 3:
+            yield d + 3000000, *video(True, False)
+        if variants and d % 10 == 7:
+            yield d + 1000000, *video(True, True)
 
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 @query(
@@ -1361,11 +1176,7 @@ def av_video_phash_offset_near_dups(
     when the corpus outgrows it."""
     from dwh_spark.multimodal.perceptual import video_offset_near_dups
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     vids = _video_offset_fixture(docs, base=True, variants=True)
     return video_offset_near_dups(vids, max_hamming=3, min_frames=3).select(
         "id_a",
@@ -1448,11 +1259,7 @@ def av_audio_fp_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_subfingerprint_frame,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = audio_subfingerprint_frame(_audio_offset_fixture(docs, base=True, variants=False))
     batch = _audio_offset_fixture(docs, base=False, variants=True)
     matches = audio_offset_incremental_ingest(index, batch, min_matches=5)
@@ -1534,11 +1341,7 @@ def av_video_phash_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_offset_vote_probe,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = video_dhash_frames(_video_offset_fixture(docs, base=True, variants=False))
     batch = _video_offset_fixture(docs, base=False, variants=True)
     matches = video_offset_vote_probe(
@@ -1562,40 +1365,16 @@ def _audio_snippet_fixture(docs, base: bool, snippets: bool):
     id arm the offset fixture doesn't use). A 40-window snippet yields
     8 subfingerprints; all 8 match the source clip at offset 8."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
+    def rows(d):
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        s = md5_clip(f"off:{d}", range(57))
+        if base:
+            yield d, wav_encode(s, 1000)
+        if snippets and d % 10 == 1:
+            yield d + 4000000, wav_encode(s[8 * 64 : 48 * 64], 1000)
 
-        def clip(d: int) -> "_np.ndarray":
-            wins = []
-            for w in range(57):
-                a = (
-                    int(_hashlib.md5(f"off:{d}:{w}".encode()).hexdigest()[:4], 16)
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d)
-                if base:
-                    rows.append((d, wav_encode(s, 1000)))
-                if snippets and d % 10 == 1:
-                    rows.append(
-                        (d + 4000000, wav_encode(s[8 * 64 : 48 * 64], 1000))
-                    )
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 @query(
@@ -1670,11 +1449,7 @@ def av_audio_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_subfingerprint_frame,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = audio_subfingerprint_frame(
         _audio_snippet_fixture(docs, base=True, snippets=False)
     )
@@ -1698,44 +1473,18 @@ def _video_snippet_fixture(docs, base: bool, snippets: bool):
     id +4,000,000, doc_id%10==1 — an id arm the offset fixture doesn't
     use). All 3 excerpt frames hit the source video at offset 1."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"voff:{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
+        frames = [md5_grid(f"voff:{d}:{f}") for f in range(5)]
+        if base:
+            yield d, 5, codecs.avi_encode(_np.stack(frames))
+        if snippets and d % 10 == 1:
+            yield d + 4000000, 3, codecs.avi_encode(_np.stack(frames[1:4]))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                frames = [grid(d, f) for f in range(5)]
-                if base:
-                    out.append((d, 5, codecs.avi_encode(_np.stack(frames))))
-                if snippets and d % 10 == 1:
-                    out.append(
-                        (d + 4000000, 3, codecs.avi_encode(_np.stack(frames[1:4])))
-                    )
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
-
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 @query(
@@ -1804,11 +1553,7 @@ def av_video_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_offset_vote_probe,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = video_dhash_frames(_video_snippet_fixture(docs, base=True, snippets=False))
     queries_fp = video_dhash_frames(
         _video_snippet_fixture(docs, base=False, snippets=True)
@@ -1848,42 +1593,22 @@ def _audio_silence_offset_fixture(docs, base: bool, variants: bool):
     id +1,000,000, %10==7; gain maps silence to silence and scales
     every content energy equally)."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
-        sil = _np.zeros(48 * 64, dtype=_np.int64)
+        sil = _np.zeros(48 * 64, dtype=_np.int16)
+        s = _np.concatenate([sil, md5_clip(f"offc:{d}", range(57))])
+        if base:
+            yield d, wav_encode(s, 1000)
+        if variants and d % 10 == 3:
+            yield d + 3000000, wav_encode(s[8 * 64:], 1000)
+        if variants and d % 10 == 7:
+            doubled = (s[: 97 * 64].astype(_np.int64) * 2).astype(_np.int16)
+            yield d + 1000000, wav_encode(doubled, 1000)
 
-        def clip(d: int) -> "_np.ndarray":
-            wins = [sil]
-            for w in range(57):
-                a = (
-                    int(_hashlib.md5(f"offc:{d}:{w}".encode()).hexdigest()[:4], 16)
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d)
-                if base:
-                    rows.append((d, wav_encode(s, 1000)))
-                if variants and d % 10 == 3:
-                    rows.append((d + 3000000, wav_encode(s[8 * 64:], 1000)))
-                if variants and d % 10 == 7:
-                    doubled = (s[: 97 * 64].astype(_np.int64) * 2).astype(_np.int16)
-                    rows.append((d + 1000000, wav_encode(doubled, 1000)))
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 @query(
@@ -1981,11 +1706,7 @@ def av_audio_fp_offset_capped_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         audio_subfingerprint_frame,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     # the subfp frame feeds attach_subfp_df's groupBy AND its join —
     # persist so the WAV corpus is decoded once, not twice (ADVICE r13)
     subfps = persist_slot(
@@ -2020,58 +1741,30 @@ def _video_black_offset_fixture(docs, base: bool, variants: bool):
     moves <= 2 dHash bits, so the edited frame still votes and the
     edit shows in total_hamming)."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
         black = _np.full((8, 8, 3), 50, _np.uint8)
 
-        def grid(b: int, f: int, flip: bool) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"vblk:{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
-
-        def video(b: int, head_drop: bool, edit: bool):
+        def video(head_drop: bool, edit: bool):
             frames = [black] * 4 + [
-                grid(b, f, flip=edit and f == 2) for f in range(5)
+                md5_grid(f"vblk:{d}:{f}", flip=d if edit and f == 2 else None)
+                for f in range(5)
             ]
             if head_drop:
                 frames = frames[1:]
-            return codecs.avi_encode(_np.stack(frames)), len(frames)
+            return len(frames), codecs.avi_encode(_np.stack(frames))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    v, n = video(d, False, False)
-                    out.append((d, n, v))
-                if variants and d % 10 == 3:
-                    v, n = video(d, True, False)
-                    out.append((d + 3000000, n, v))
-                if variants and d % 10 == 7:
-                    v, n = video(d, True, True)
-                    out.append((d + 1000000, n, v))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
+        if base:
+            yield d, *video(False, False)
+        if variants and d % 10 == 3:
+            yield d + 3000000, *video(True, False)
+        if variants and d % 10 == 7:
+            yield d + 1000000, *video(True, True)
 
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 @query(
@@ -2184,11 +1877,7 @@ def av_video_phash_offset_capped_ingest(
         video_offset_vote_probe,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = persist_slot(
         "av.capped.video",
         lambda: video_dhash_frames(
@@ -2232,55 +1921,32 @@ def _audio_corpus_fixture(docs, base: bool = True, variants: bool = True,
     brand-new clip per %10==5 doc (+6,000,000, seed 'acbN:') for the
     triage's 'kept' arm."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        s = md5_clip(f"acb:{d}", range(57))
+        wav = wav_encode(s, 1000)
+        if base:
+            yield d, wav
+        if variants and d % 10 == 2:
+            yield d + 1000000, wav
+        if variants and d % 10 == 4:
+            g = (s.astype(_np.int64) * 2).astype(_np.int16)
+            yield d + 2000000, wav_encode(g, 1000)
+        if variants and d % 10 == 6:
+            sh = _np.concatenate([s[8 * 64:], s[: 8 * 64]])
+            yield d + 3000000, wav_encode(sh, 1000)
+        if variants and d % 10 == 8:
+            flat = _np.full(57 * 64, 100 + d % 800, _np.int16)
+            yield d + 4000000, wav_encode(flat, 1000)
+        if variants and d % 10 == 0:
+            yield d + 5000000, wav[:24]
+        if novel and d % 10 == 5:
+            yield d + 6000000, wav_encode(md5_clip(f"acbN:{d}", range(57)), 1000)
 
-        def clip(d: int, prefix: str) -> "_np.ndarray":
-            wins = []
-            for w in range(57):
-                a = (
-                    int(
-                        _hashlib.md5(f"{prefix}{d}:{w}".encode()).hexdigest()[:4],
-                        16,
-                    )
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d, "acb:")
-                wav = wav_encode(s, 1000)
-                if base:
-                    rows.append((d, wav))
-                if variants and d % 10 == 2:
-                    rows.append((d + 1000000, wav))
-                if variants and d % 10 == 4:
-                    g = (s.astype(_np.int64) * 2).astype(_np.int16)
-                    rows.append((d + 2000000, wav_encode(g, 1000)))
-                if variants and d % 10 == 6:
-                    sh = _np.concatenate([s[8 * 64:], s[: 8 * 64]])
-                    rows.append((d + 3000000, wav_encode(sh, 1000)))
-                if variants and d % 10 == 8:
-                    flat = _np.full(57 * 64, 100 + d % 800, _np.int16)
-                    rows.append((d + 4000000, wav_encode(flat, 1000)))
-                if variants and d % 10 == 0:
-                    rows.append((d + 5000000, wav[:24]))
-                if novel and d % 10 == 5:
-                    rows.append((d + 6000000, wav_encode(clip(d, "acbN:"), 1000)))
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 def _audio_feature_frame(audio):
@@ -2537,11 +2203,7 @@ def av_audio_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.operators.dedup import simhash_blocked_pairs
     from dwh_spark.operators.sampling import hash_bucket
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     feats = persist_slot(
         "av.corpus.audio", lambda: _audio_feature_frame(_audio_corpus_fixture(docs))
     )
@@ -2719,11 +2381,7 @@ def av_audio_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from dwh_spark.operators.dedup import simhash_blocked_probe
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     corpus_feats, batch_feats = persist_slot(
         "av.corpus.audio",
         lambda: (
@@ -2806,68 +2464,39 @@ def _video_corpus_fixture(docs, base: bool = True, variants: bool = True,
     adds a brand-new video per %10==5 doc (+6,000,000, 'vcbN:') for
     the triage's 'kept' arm."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int, flip: bool, prefix: str) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"{prefix}{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
-
-        def video(b: int, head_drop: bool = False, edit: bool = False,
+        def video(head_drop: bool = False, edit: bool = False,
                   prefix: str = "vcb:"):
             frames = [
-                grid(b, f, flip=edit and f == 2, prefix=prefix)
+                md5_grid(f"{prefix}{d}:{f}", flip=d if edit and f == 2 else None)
                 for f in range(5)
             ]
             if head_drop:
                 frames = frames[1:]
-            return codecs.avi_encode(_np.stack(frames)), len(frames)
+            return len(frames), codecs.avi_encode(_np.stack(frames))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v, n = video(d)
-                if base:
-                    out.append((d, n, v))
-                if variants and d % 10 == 2:
-                    out.append((d + 1000000, n, v))
-                if variants and d % 10 == 4:
-                    ve, ne = video(d, edit=True)
-                    out.append((d + 2000000, ne, ve))
-                if variants and d % 10 == 6:
-                    vd, nd = video(d, head_drop=True)
-                    out.append((d + 3000000, nd, vd))
-                if variants and d % 10 == 8:
-                    blk = _np.full((5, 8, 8, 3), 50, _np.uint8)
-                    out.append((d + 4000000, 5, codecs.avi_encode(blk)))
-                if variants and d % 10 == 0:
-                    out.append((d + 5000000, n, v[:16]))
-                if novel and d % 10 == 5:
-                    vn, nn = video(d, prefix="vcbN:")
-                    out.append((d + 6000000, nn, vn))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
+        n, v = video()
+        if base:
+            yield d, n, v
+        if variants and d % 10 == 2:
+            yield d + 1000000, n, v
+        if variants and d % 10 == 4:
+            yield d + 2000000, *video(edit=True)
+        if variants and d % 10 == 6:
+            yield d + 3000000, *video(head_drop=True)
+        if variants and d % 10 == 8:
+            blk = _np.full((5, 8, 8, 3), 50, _np.uint8)
+            yield d + 4000000, 5, codecs.avi_encode(blk)
+        if variants and d % 10 == 0:
+            yield d + 5000000, n, v[:16]
+        if novel and d % 10 == 5:
+            yield d + 6000000, *video(prefix="vcbN:")
 
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 def _video_feature_frame(videos):
@@ -3092,11 +2721,7 @@ def av_video_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dwh_spark.operators.sampling import hash_bucket
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     feats = persist_slot(
         "av.corpus.video", lambda: _video_feature_frame(_video_corpus_fixture(docs))
     )
@@ -3262,11 +2887,7 @@ def av_video_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame
         video_offset_vote_probe,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     corpus_feats, batch_feats = persist_slot(
         "av.corpus.video",
         lambda: (
@@ -3339,50 +2960,23 @@ def _video_drift_fixture(docs, base: bool, variants: bool):
     carrying 4 matchable frames; id +1,000,000, %10==7) — the pair
     the unbanded vote finds and the banded contract excludes."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"vdrf:{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
+        def video(drop: int):
+            frames = [md5_grid(f"vdrf:{d}:{f}") for f in range(8)][drop:]
+            return len(frames), codecs.avi_encode(_np.stack(frames))
 
-        def video(b: int, drop: int):
-            frames = [grid(b, f) for f in range(8)][drop:]
-            return codecs.avi_encode(_np.stack(frames)), len(frames)
+        if base:
+            yield d, *video(0)
+        if variants and d % 10 == 3:
+            yield d + 3000000, *video(1)
+        if variants and d % 10 == 7:
+            yield d + 1000000, *video(4)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    v, n = video(d, 0)
-                    out.append((d, n, v))
-                if variants and d % 10 == 3:
-                    v, n = video(d, 1)
-                    out.append((d + 3000000, n, v))
-                if variants and d % 10 == 7:
-                    v, n = video(d, 4)
-                    out.append((d + 1000000, n, v))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
-
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 @query(
@@ -3451,11 +3045,7 @@ def av_video_phash_offset_banded_near_dups(
     filter."""
     from dwh_spark.multimodal.perceptual import video_offset_near_dups
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     vids = _video_drift_fixture(docs, base=True, variants=True)
     return video_offset_near_dups(
         vids, max_hamming=3, min_frames=3, max_offset=2
@@ -3553,11 +3143,7 @@ def av_audio_fp_offset_entropy_ingest(spark: SparkSession, sf_dir: str) -> DataF
         drop_low_entropy_words,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     index = drop_low_entropy_words(
         audio_subfingerprint_frame(
             _audio_silence_offset_fixture(docs, base=True, variants=False)
@@ -3588,39 +3174,17 @@ def _audio_forget_fixture(docs, base: bool, variants: bool):
     OTHER (they share base windows 8..48) while nothing matches the
     forgotten base itself."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
+    def rows(d):
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        s = md5_clip(f"fgt:{d}", range(57))
+        if base:
+            yield d, wav_encode(s, 1000)
+        if variants and d % 10 == 3:
+            yield d + 3000000, wav_encode(s[8 * 64:], 1000)
+            yield d + 1000000, wav_encode(s[: 49 * 64], 1000)
 
-        def clip(d: int) -> "_np.ndarray":
-            wins = []
-            for w in range(57):
-                a = (
-                    int(_hashlib.md5(f"fgt:{d}:{w}".encode()).hexdigest()[:4], 16)
-                    % 2048
-                )
-                wins.append((a + j * 13) % 2048 - 1024)
-            return _np.concatenate(wins).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s = clip(d)
-                if base:
-                    rows.append((d, wav_encode(s, 1000)))
-                if variants and d % 10 == 3:
-                    rows.append((d + 3000000, wav_encode(s[8 * 64:], 1000)))
-                    rows.append((d + 1000000, wav_encode(s[: 49 * 64], 1000)))
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 _AV_AUDIO_FORGET_ORACLE = """
@@ -3720,11 +3284,7 @@ def av_audio_offset_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dwh_spark.operators.forget import forget_subfp_index
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     # one decode pass feeds the df attach (groupBy + join), the forget
     # (semi + anti), the pairs vote and the ghost probe
     subfps = persist_slot(
@@ -3769,49 +3329,22 @@ def _video_forget_fixture(docs, base: bool, variants: bool):
     id +1,000,000) — so after the base is forgotten its two copies
     still pair with each other (3 shared frames at offset -1)."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, f: int) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"vfg:{b}:{f}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
+        def video(drop: int):
+            frames = [md5_grid(f"vfg:{d}:{f}") for f in range(5)][drop:]
+            return len(frames), codecs.avi_encode(_np.stack(frames))
 
-        def video(b: int, drop: int):
-            frames = [grid(b, f) for f in range(5)][drop:]
-            return codecs.avi_encode(_np.stack(frames)), len(frames)
+        if base:
+            yield d, *video(0)
+        if variants and d % 10 == 3:
+            yield d + 3000000, *video(1)
+            yield d + 1000000, *video(2)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    v, n = video(d, 0)
-                    out.append((d, n, v))
-                if variants and d % 10 == 3:
-                    v, n = video(d, 1)
-                    out.append((d + 3000000, n, v))
-                    v, n = video(d, 2)
-                    out.append((d + 1000000, n, v))
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
-
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 _AV_VIDEO_FORGET_ORACLE = """
@@ -3896,11 +3429,7 @@ def av_video_offset_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dwh_spark.operators.forget import forget_frame_index, shrink_block_df
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     # one decode pass feeds the stats build, the forget split (semi +
     # anti), the pairs vote and the ghost probe
     frames = persist_slot(
@@ -4054,11 +3583,7 @@ def av_audio_fp_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.multimodal.audio_fp import audio_subfingerprint_frame
     from dwh_spark.operators.caps import calibrate_cap, cap_report
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     # the stats table feeds three consumers (quantile histogram,
     # report aggregate, dropped-value listing) — persist the BOUNDED
     # stats, so the WAV corpus decodes once
@@ -4099,44 +3624,19 @@ def _audio_jingle_offset_fixture(docs, base: bool, variants: bool):
     HEAD-TRIMMED content copy (8 windows cut, id +3,000,000) plants
     the genuine-match class that must SURVIVE the cap."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal.audio import wav_encode
 
-        j = _np.arange(64, dtype=_np.int64)
+        if base:
+            c = md5_clip(f"cap2:{d}", range(57))
+            s = _np.concatenate([md5_clip("jgl", range(40)), c]) if d % 5 == 0 else c
+            yield d, wav_encode(s, 1000)
+        if variants and d % 10 == 3:
+            yield d + 3000000, wav_encode(md5_clip(f"cap2:{d}", range(8, 57)), 1000)
 
-        def win(seed: str) -> "_np.ndarray":
-            a = int(_hashlib.md5(seed.encode()).hexdigest()[:4], 16) % 2048
-            return (a + j * 13) % 2048 - 1024
-
-        jingle = _np.concatenate(
-            [win(f"jgl:{w}") for w in range(40)]
-        ).astype(_np.int16)
-
-        def content(d: int, skip: int, n: int) -> "_np.ndarray":
-            return _np.concatenate(
-                [win(f"cap2:{d}:{w}") for w in range(skip, skip + n)]
-            ).astype(_np.int16)
-
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if base:
-                    c = content(d, 0, 57)
-                    s = _np.concatenate([jingle, c]) if d % 5 == 0 else c
-                    rows.append((d, wav_encode(s.astype(_np.int16), 1000)))
-                if variants and d % 10 == 3:
-                    rows.append(
-                        (d + 3000000, wav_encode(content(d, 8, 49), 1000))
-                    )
-            yield _pd.DataFrame(rows, columns=["audio_id", "content"])
-
-    return docs.mapInPandas(gen, "audio_id long, content binary")
+    return synthesize(docs, rows, "audio_id long, content binary")
 
 
 def _video_title_offset_fixture(docs, base: bool, variants: bool):
@@ -4151,52 +3651,21 @@ def _video_title_offset_fixture(docs, base: bool, variants: bool):
     HEAD-DROPPED content copy (1 frame cut, id +3,000,000) plants the
     genuine-match class that must survive the cap."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
+    def rows(d):
         import numpy as _np
-        import pandas as _pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(seed: str) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(f"{seed}:{r}:{c}".encode()).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
+        content = [md5_grid(f"vcnt:{d}:{f}") for f in range(5)]
+        if base:
+            title = [md5_grid(f"vttl:{f}") for f in range(3)] if d % 5 == 0 else []
+            frames = title + content
+            yield d, len(frames), codecs.avi_encode(_np.stack(frames))
+        if variants and d % 10 == 3:
+            frames = content[1:]
+            yield d + 3000000, len(frames), codecs.avi_encode(_np.stack(frames))
 
-        title = [grid(f"vttl:{f}") for f in range(3)]
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = [grid(f"vcnt:{d}:{f}") for f in range(5)]
-                if base:
-                    frames = (title if d % 5 == 0 else []) + content
-                    out.append(
-                        (d, len(frames), codecs.avi_encode(_np.stack(frames)))
-                    )
-                if variants and d % 10 == 3:
-                    frames = content[1:]
-                    out.append(
-                        (
-                            d + 3000000,
-                            len(frames),
-                            codecs.avi_encode(_np.stack(frames)),
-                        )
-                    )
-            yield _pd.DataFrame(out, columns=["video_id", "n_frames", "content"])
-
-    return docs.mapInPandas(gen, "video_id long, n_frames long, content binary")
+    return synthesize(docs, rows, "video_id long, n_frames long, content binary")
 
 
 _AV_WINDOW_LEDGER_ORACLE = f"""
@@ -4283,7 +3752,7 @@ def av_audio_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import ParquetAppendLog, append_batches
     from dwh_spark.streaming.maintenance import run_fp_maintenance_window
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     subs = audio_subfingerprint_frame(
         _audio_silence_offset_fixture(docs, base=True, variants=False)
     )
@@ -4453,7 +3922,7 @@ def av_video_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import ParquetAppendLog, append_batches
     from dwh_spark.streaming.maintenance import run_fp_maintenance_window
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     frames = video_dhash_frames(
         _video_black_offset_fixture(docs, base=True, variants=False)
     )

@@ -29,6 +29,7 @@ from dwh_spark.multimodal.images import (
 from dwh_spark.plans.registry import query
 from dwh_spark.session import persist_slot
 from dwh_spark.sources.catalog import load_table
+from dwh_spark.sources.media_fixtures import doc_ids, md5_grid, synthesize
 
 _MAGICS: dict[int, bytes] = {
     0: b"\x89PNG\r\n\x1a\n",          # 8 bytes
@@ -246,39 +247,28 @@ def imgs_real_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # additional oracle coverage. 32-way spread because the
     # single-row-group fixture would otherwise run every PNG/BMP
     # encode+decode on ONE core (mapInPandas inherits partitioning).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 < 2)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 < 2)
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                arr = np.empty((24, 32, 3), np.uint8)
-                arr[:, :, 0] = (d * 37) % 256
-                arr[:, :, 1] = (d * 59) % 256
-                arr[:, :, 2] = (d * 83) % 256
-                if d % 2 == 0:
-                    # half the PNGs are Adam7-interlaced so the driver
-                    # row also pins the deinterlacing decode path
-                    content = codecs.png_encode(arr, interlace=(d % 4 == 0))
-                else:
-                    content = codecs.bmp_encode(arr)
-                out.append((d, "owner", str(d), content))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.empty((24, 32, 3), np.uint8)
+        arr[:, :, 0] = (d * 37) % 256
+        arr[:, :, 1] = (d * 59) % 256
+        arr[:, :, 2] = (d * 83) % 256
+        if d % 2 == 0:
+            # half the PNGs are Adam7-interlaced so the driver
+            # row also pins the deinterlacing decode path
+            content = codecs.png_encode(arr, interlace=(d % 4 == 0))
+        else:
+            content = codecs.bmp_encode(arr)
+        yield d, "owner", str(d), content
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
@@ -363,37 +353,21 @@ def imgs_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dwh_spark.multimodal.images import pixel_decoder
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter((F.col("doc_id") % 10).isin(2, 7))
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir, (F.col("doc_id") % 10).isin(2, 7))  # single-row-group fixture would pin one core
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                arr = np.full((24, 32, 3), (d * 37) % 256, np.uint8)
-                sub = "4:2:0" if d % 2 == 0 else "4:4:4"
-                enc = (
-                    codecs.jpeg_encode_progressive
-                    if d % 10 == 7
-                    else codecs.jpeg_encode
-                )
-                content = enc(arr, quality=100, subsampling=sub)
-                out.append((d, "owner", str(d), content))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.full((24, 32, 3), (d * 37) % 256, np.uint8)
+        sub = "4:2:0" if d % 2 == 0 else "4:4:4"
+        enc = codecs.jpeg_encode_progressive if d % 10 == 7 else codecs.jpeg_encode
+        yield d, "owner", str(d), enc(arr, quality=100, subsampling=sub)
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
@@ -467,33 +441,22 @@ def imgs_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly and the oracle pins all three channel means."""
     from dwh_spark.multimodal.images import pixel_decoder
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 3)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 3)
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                arr = np.empty((24, 32, 3), np.uint8)
-                arr[:, :, 0] = (d * 37) % 256
-                arr[:, :, 1] = (d * 59) % 256
-                arr[:, :, 2] = (d * 83) % 256
-                out.append((d, "owner", str(d), codecs.gif_encode(arr)))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.empty((24, 32, 3), np.uint8)
+        arr[:, :, 0] = (d * 37) % 256
+        arr[:, :, 1] = (d * 59) % 256
+        arr[:, :, 2] = (d * 83) % 256
+        yield d, "owner", str(d), codecs.gif_encode(arr)
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
@@ -563,34 +526,23 @@ def imgs_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression column proves both strip paths ran."""
     from dwh_spark.multimodal.images import pixel_decoder
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 5)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 5)
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                arr = np.empty((24, 32, 3), np.uint8)
-                arr[:, :, 0] = (d * 37) % 256
-                arr[:, :, 1] = (d * 59) % 256
-                arr[:, :, 2] = (d * 83) % 256
-                comp = "none" if d % 2 == 0 else "lzw"
-                out.append((d, "owner", str(d), codecs.tiff_encode(arr, comp)))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.empty((24, 32, 3), np.uint8)
+        arr[:, :, 0] = (d * 37) % 256
+        arr[:, :, 1] = (d * 59) % 256
+        arr[:, :, 2] = (d * 83) % 256
+        comp = "none" if d % 2 == 0 else "lzw"
+        yield d, "owner", str(d), codecs.tiff_encode(arr, comp)
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
@@ -667,46 +619,33 @@ def imgs_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     three channel means from the construction arithmetic."""
     from dwh_spark.multimodal.images import pixel_decoder
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 4)
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 4)
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import vp8l
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                arr = np.empty((24, 32, 3), np.uint8)
-                arr[:, :, 0] = (d * 37) % 256
-                arr[:, :, 1] = (d * 59) % 256
-                arr[:, :, 2] = (d * 83) % 256
-                if d % 3 == 0:
-                    data = vp8l.webp_encode(arr, palette=True)
-                elif d % 3 == 1:
-                    data = vp8l.webp_encode(
-                        arr, subtract_green=True, cache_bits=4
-                    )
-                else:
-                    data = vp8l.webp_encode(
-                        arr,
-                        subtract_green=True,
-                        predictor_mode=d % 14,
-                        color_transform=(13, 27, 5),
-                    )
-                out.append((d, "owner", str(d), data))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.empty((24, 32, 3), np.uint8)
+        arr[:, :, 0] = (d * 37) % 256
+        arr[:, :, 1] = (d * 59) % 256
+        arr[:, :, 2] = (d * 83) % 256
+        if d % 3 == 0:
+            data = vp8l.webp_encode(arr, palette=True)
+        elif d % 3 == 1:
+            data = vp8l.webp_encode(arr, subtract_green=True, cache_bits=4)
+        else:
+            data = vp8l.webp_encode(
+                arr,
+                subtract_green=True,
+                predictor_mode=d % 14,
+                color_transform=(13, 27, 5),
+            )
+        yield d, "owner", str(d), data
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
@@ -825,31 +764,19 @@ def imgs_jpeg_reencode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is that constant. So decoded dims must equal the resize targets
     and every channel mean must equal the construction arithmetic
     ((doc_id*41) % 256), with zero codec terms in the SQL."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 10 == 4)
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 10 == 4)  # single-row-group fixture would pin one core
 
     gen_schema = "doc_id long, owner string, token_id string, content binary"
 
-    def gen(batches):
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                g = (d * 41) % 256
-                arr = np.full((24, 32, 3), g, np.uint8)
-                out.append((d, "owner", str(d), codecs.png_encode(arr)))
-            yield pd.DataFrame(out, columns=["doc_id", "owner", "token_id", "content"])
+        arr = np.full((24, 32, 3), (d * 41) % 256, np.uint8)
+        yield d, "owner", str(d), codecs.png_encode(arr)
 
-    images = docs.mapInPandas(gen, gen_schema)
+    images = synthesize(docs, rows, gen_schema)
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
 
     stats_schema = (
@@ -959,11 +886,7 @@ def imgs_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 56 bits, inside the hamming budget."""
     from dwh_spark.multimodal.perceptual import perceptual_near_dup_pairs
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir)  # single-row-group fixture would pin one core
     images = _phash_fixture_images(docs, base=True, variants=True)
     pairs = perceptual_near_dup_pairs(images, key="image_id", max_hamming=3)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
@@ -978,43 +901,20 @@ def _phash_fixture_images(docs, base: bool, variants: bool):
     (``variants``). Deterministic arithmetic end-to-end so the DuckDB
     oracles re-derive every dHash without decoding."""
 
-    def gen(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
+    def rows(d):
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, flip: bool) -> np.ndarray:
-            g = np.empty((8, 8), np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(hashlib.md5(f"{b}:{r}:{c}".encode()).hexdigest()[0], 16)
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = np.where(g[:, :, None] == 1, 200, 50).astype(np.uint8)
-            return np.repeat(rgb, 3, axis=2)
+        base_img = md5_grid(f"{d}")
+        if base:
+            yield d, codecs.png_encode(base_img)
+        if variants and d % 10 == 4:
+            up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
+            yield d + 1000000, codecs.bmp_encode(up2)
+        if variants and d % 10 == 6:
+            edited = md5_grid(f"{d}", flip=d).repeat(3, axis=0).repeat(3, axis=1)
+            yield d + 2000000, codecs.gif_encode(edited)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base_img = grid(d, flip=False)
-                if base:
-                    out.append((d, codecs.png_encode(base_img)))
-                if variants and d % 10 == 4:
-                    up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
-                    out.append((d + 1000000, codecs.bmp_encode(up2)))
-                if variants and d % 10 == 6:
-                    edited = grid(d, flip=True).repeat(3, axis=0).repeat(3, axis=1)
-                    out.append((d + 2000000, codecs.gif_encode(edited)))
-            yield pd.DataFrame(out, columns=["image_id", "content"])
-
-    return docs.mapInPandas(gen, "image_id long, content binary").withColumn(
+    return synthesize(docs, rows, "image_id long, content binary").withColumn(
         "format", sniff_format(F.col("content"))
     )
 
@@ -1077,11 +977,7 @@ def imgs_phash_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         perceptual_incremental_ingest,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)  # single-row-group fixture would pin one core
-    )
+    docs = doc_ids(spark, sf_dir)  # single-row-group fixture would pin one core
     index = dhash_frame(_phash_fixture_images(docs, base=True, variants=False))
     batch = _phash_fixture_images(docs, base=False, variants=True)
     matches = perceptual_incremental_ingest(index, batch, max_hamming=3)
@@ -1108,54 +1004,30 @@ def _imgs_corpus_fixture(docs, base: bool = True, variants: bool = True):
     same-pixels ⇔ same-bytes within one codec+size class) from doc_id
     alone, never decoding."""
 
-    def gen(batches):
-        import hashlib
-
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, flip: bool) -> np.ndarray:
-            g = np.empty((8, 8), np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            hashlib.md5(f"icb:{b}:{r}:{c}".encode()).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = np.where(g[:, :, None] == 1, 200, 50).astype(np.uint8)
-            return np.repeat(rgb, 3, axis=2)
+        base_img = md5_grid(f"icb:{d}")
+        png = codecs.png_encode(base_img)
+        if base:
+            yield d, png
+        if variants and d % 10 == 2:
+            yield d + 1000000, png
+        if variants and d % 10 == 4:
+            up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
+            yield d + 2000000, codecs.bmp_encode(up2)
+        if variants and d % 10 == 6:
+            edited = md5_grid(f"icb:{d}", flip=d).repeat(3, axis=0).repeat(3, axis=1)
+            yield d + 3000000, codecs.gif_encode(edited)
+        if variants and d % 10 == 8:
+            flat = np.full((8, 8, 3), 50, np.uint8)
+            yield d + 4000000, codecs.png_encode(flat)
+        if variants and d % 10 == 0:
+            yield d + 5000000, png[:24]
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base_img = grid(d, flip=False)
-                png = codecs.png_encode(base_img)
-                if base:
-                    out.append((d, png))
-                if variants and d % 10 == 2:
-                    out.append((d + 1000000, png))
-                if variants and d % 10 == 4:
-                    up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
-                    out.append((d + 2000000, codecs.bmp_encode(up2)))
-                if variants and d % 10 == 6:
-                    edited = grid(d, flip=True).repeat(3, axis=0).repeat(3, axis=1)
-                    out.append((d + 3000000, codecs.gif_encode(edited)))
-                if variants and d % 10 == 8:
-                    flat = np.full((8, 8, 3), 50, np.uint8)
-                    out.append((d + 4000000, codecs.png_encode(flat)))
-                if variants and d % 10 == 0:
-                    out.append((d + 5000000, png[:24]))
-            yield pd.DataFrame(out, columns=["image_id", "content"])
-
-    return docs.mapInPandas(gen, "image_id long, content binary").withColumn(
+    return synthesize(docs, rows, "image_id long, content binary").withColumn(
         "format", sniff_format(F.col("content"))
     )
 
@@ -1343,11 +1215,7 @@ def imgs_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.operators.dedup import simhash_blocked_pairs
     from dwh_spark.operators.sampling import hash_bucket
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     feats = persist_slot(
         "images.corpus", lambda: _imgs_feature_frame(_imgs_corpus_fixture(docs))
     )
@@ -1497,11 +1365,7 @@ def imgs_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.multimodal.perceptual import DHASH_BITS
     from dwh_spark.operators.dedup import simhash_blocked_probe
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     corpus_feats, batch_feats = persist_slot(
         "images.corpus",
         lambda: (
@@ -1566,46 +1430,23 @@ def _imgs_flat_phash_fixture(docs, base: bool, variants: bool):
     %10==8 doc (id +2,000,000 — without a guard it would pair with
     EVERY stored flat image)."""
 
-    def gen(batches):
-        import hashlib
-
+    def rows(d):
         import numpy as np
-        import pandas as pd
 
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int) -> np.ndarray:
-            g = np.empty((8, 8), np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            hashlib.md5(f"ipc:{b}:{r}:{c}".encode()).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            rgb = np.where(g[:, :, None] == 1, 200, 50).astype(np.uint8)
-            return np.repeat(rgb, 3, axis=2)
-
         flat = np.full((8, 8, 3), 50, np.uint8)
+        if base:
+            yield d, codecs.png_encode(md5_grid(f"ipc:{d}"))
+            if d % 2 == 0:
+                yield d + 3000000, codecs.png_encode(flat)
+        if variants and d % 10 == 4:
+            up2 = md5_grid(f"ipc:{d}").repeat(2, axis=0).repeat(2, axis=1)
+            yield d + 1000000, codecs.bmp_encode(up2)
+        if variants and d % 10 == 8:
+            yield d + 2000000, codecs.png_encode(flat)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if base:
-                    out.append((d, codecs.png_encode(grid(d))))
-                    if d % 2 == 0:
-                        out.append((d + 3000000, codecs.png_encode(flat)))
-                if variants and d % 10 == 4:
-                    up2 = grid(d).repeat(2, axis=0).repeat(2, axis=1)
-                    out.append((d + 1000000, codecs.bmp_encode(up2)))
-                if variants and d % 10 == 8:
-                    out.append((d + 2000000, codecs.png_encode(flat)))
-            yield pd.DataFrame(out, columns=["image_id", "content"])
-
-    return docs.mapInPandas(gen, "image_id long, content binary").withColumn(
+    return synthesize(docs, rows, "image_id long, content binary").withColumn(
         "format", sniff_format(F.col("content"))
     )
 
@@ -1700,11 +1541,7 @@ def imgs_phash_capped_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dwh_spark.operators.dedup import simhash_block_df
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     # the fingerprint frame feeds BOTH the stats build and the probe —
     # persist so the image corpus is decoded once, not twice (ADVICE r13)
     index = persist_slot(
@@ -1747,46 +1584,18 @@ def _imgs_forget_fixture(docs, base: bool, variants: bool):
     the same <= 2-bit hamming) while nothing matches the forgotten
     base itself."""
 
-    def gen(batches):
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
+    def rows(d):
         from dwh_spark.multimodal import codecs
 
-        def grid(b: int, flip: bool) -> "_np.ndarray":
-            g = _np.empty((8, 8), _np.uint8)
-            for r in range(8):
-                for c in range(8):
-                    g[r, c] = (
-                        int(
-                            _hashlib.md5(
-                                f"ifg:{b}:{r}:{c}".encode()
-                            ).hexdigest()[0],
-                            16,
-                        )
-                        % 2
-                    )
-            if flip:
-                g[b % 8, (b // 8) % 8] ^= 1
-            rgb = _np.where(g[:, :, None] == 1, 200, 50).astype(_np.uint8)
-            return _np.repeat(rgb, 3, axis=2)
+        base_img = md5_grid(f"ifg:{d}")
+        if base:
+            yield d, codecs.png_encode(base_img)
+        if variants and d % 10 == 3:
+            up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
+            yield d + 3000000, codecs.bmp_encode(up2)
+            yield d + 1000000, codecs.png_encode(md5_grid(f"ifg:{d}", flip=d))
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base_img = grid(d, flip=False)
-                if base:
-                    out.append((d, codecs.png_encode(base_img)))
-                if variants and d % 10 == 3:
-                    up2 = base_img.repeat(2, axis=0).repeat(2, axis=1)
-                    out.append((d + 3000000, codecs.bmp_encode(up2)))
-                    out.append((d + 1000000, codecs.png_encode(grid(d, flip=True))))
-            yield _pd.DataFrame(out, columns=["image_id", "content"])
-
-    return docs.mapInPandas(gen, "image_id long, content binary").withColumn(
+    return synthesize(docs, rows, "image_id long, content binary").withColumn(
         "format", sniff_format(F.col("content"))
     )
 
@@ -1878,11 +1687,7 @@ def imgs_phash_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dwh_spark.operators.forget import forget_rows, shrink_simhash_block_df
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(32)
-    )
+    docs = doc_ids(spark, sf_dir)
     sh = persist_slot(
         "images.corpus",
         lambda: dhash_frame(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from dwh_spark.plans.registry import query
 from dwh_spark.session import scratch_dir, session_memo
 from dwh_spark.sources.catalog import load_table
+from dwh_spark.sources.media_fixtures import doc_ids
 from dwh_spark.streaming.ingest import (
     ParquetStateStore,
     append_batches,
@@ -1933,7 +1934,7 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_phash_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     images = _phash_fixture_images(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_phash_ingest_")
@@ -2029,7 +2030,7 @@ def streaming_phash_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         run_phash_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     images = _phash_fixture_images(docs, base=True, variants=True)
     fids = docs.filter(F.col("doc_id") % 20 == 4).select(
         F.col("doc_id").alias("image_id")
@@ -2130,7 +2131,7 @@ def streaming_audio_fp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_audio_fp_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_fp_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_audio_fp_ingest_")
@@ -2218,7 +2219,7 @@ def streaming_video_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_video_phash_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     vids = _video_phash_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_video_phash_ingest_")
@@ -2315,7 +2316,7 @@ def streaming_audio_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         run_audio_offset_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_audio_offset_ingest_")
@@ -2406,7 +2407,7 @@ def streaming_video_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         run_video_offset_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     vids = _video_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_video_offset_ingest_")
@@ -2520,7 +2521,7 @@ def streaming_audio_offset_entropy_ingest(
         run_audio_offset_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_silence_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_audio_offset_entropy_ingest_")
@@ -2693,7 +2694,7 @@ def streaming_audio_offset_cap_compaction(
         run_audio_offset_cap_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_audio_offset_cap_compaction_")
@@ -2871,7 +2872,7 @@ def streaming_audio_offset_window_ingest(
         run_audio_offset_cap_window_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_audio_offset_window_ingest_")
@@ -3000,7 +3001,7 @@ def streaming_audio_offset_forget_ingest(
         run_audio_offset_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     audio = _audio_offset_fixture(docs, base=True, variants=True)
     fids = docs.filter(F.col("doc_id") % 20 == 3).select(
         F.col("doc_id").alias("audio_id")
@@ -3128,7 +3129,7 @@ def streaming_video_offset_forget_ingest(
         run_video_offset_ingest,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
+    docs = doc_ids(spark, sf_dir)
     vids = _video_offset_fixture(docs, base=True, variants=True)
     fids = docs.filter(F.col("doc_id") % 20 == 3).select(
         F.col("doc_id").alias("video_id")
@@ -3290,12 +3291,8 @@ def streaming_video_offset_cap_compaction(
         run_video_offset_cap_ingest,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 1)  # half corpus (odd: keeps %10==3 copies and %5==0 i.e. %10==5 titled)
-        .select("doc_id")
-        .repartition(32)
-    )
+    # half corpus (odd: keeps %10==3 copies and %5==0 i.e. %10==5 titled)
+    docs = doc_ids(spark, sf_dir, F.col("doc_id") % 2 == 1)
     vids = _video_title_offset_fixture(docs, base=True, variants=True)
 
     root = scratch_dir("dwh_video_offset_cap_compaction_")

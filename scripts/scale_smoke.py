@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 
 from dwh_spark.operators.sketch import kmv_distinct
 from dwh_spark.operators.temporal import asof_join
-from dwh_spark.session import get_spark
+from dwh_spark.session import get_spark, scratch_dir
+from dwh_spark.sources.media_fixtures import md5_clip, md5_grid
 
 CASE = None
 if len(sys.argv) > 1 and not sys.argv[1].isdigit():
@@ -1113,8 +1114,6 @@ def phash_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None:
     a 100k-image corpus / 1k-image batch of planted 2× BMP re-encodes
     (dHash-invariant by construction, so every batch image must hit
     its base)."""
-    import tempfile
-
     from dwh_spark.multimodal.images import sniff_format
     from dwh_spark.multimodal.perceptual import (
         dhash_frame,
@@ -1129,35 +1128,19 @@ def phash_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None:
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
-            import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal import codecs
-
-            def grid(b: int) -> "np.ndarray":
-                g = np.empty((8, 8), np.uint8)
-                for r in range(8):
-                    for c in range(8):
-                        g[r, c] = (
-                            int(
-                                hashlib.md5(f"{b}:{r}:{c}".encode()).hexdigest()[0],
-                                16,
-                            )
-                            % 2
-                        )
-                rgb = np.where(g[:, :, None] == 1, 200, 50).astype(np.uint8)
-                return np.repeat(rgb, 3, axis=2)
 
             for pdf in batches:
                 out = []
                 for i in pdf["id"]:
                     i = int(i)
                     if which == "base":
-                        out.append((i, codecs.png_encode(grid(i))))
+                        out.append((i, codecs.png_encode(md5_grid(f"{i}"))))
                     else:
-                        img = grid(base_of(i)).repeat(2, axis=0).repeat(2, axis=1)
+                        img = md5_grid(f"{base_of(i)}")
+                        img = img.repeat(2, axis=0).repeat(2, axis=1)
                         out.append((10_000_000 + i, codecs.bmp_encode(img)))
                 yield pd.DataFrame(out, columns=["image_id", "content"])
 
@@ -1168,7 +1151,7 @@ def phash_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None:
     corpus = gen("base", n_corpus, None)
     batch = gen("reenc", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_phash_smoke_")
+    root = scratch_dir("dwh_phash_smoke_")
     t = time.perf_counter()
     dhash_frame(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1278,8 +1261,6 @@ def audio_fp_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None
     alternative re-DECODES every corpus WAV per ingest. Planted batch:
     exact-2x-gain copies (fingerprint-identical by construction, so
     every batch clip must hit its base)."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         audio_fp_frame,
         audio_fp_incremental_ingest,
@@ -1293,33 +1274,21 @@ def audio_fp_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
             import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
-
-            j = np.arange(64, dtype=np.int64)
-
-            def clip(d: int) -> "np.ndarray":
-                wins = []
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
 
             for pdf in batches:
                 out = []
                 for i in pdf["id"]:
                     i = int(i)
                     if which == "base":
-                        out.append((i, wav_encode(clip(i), 1000)))
+                        s = md5_clip(f"{i}", range(57))
+                        out.append((i, wav_encode(s, 1000)))
                     else:
-                        s2 = (clip(base_of(i)) * 2).astype(np.int16)
+                        s = md5_clip(f"{base_of(i)}", range(57))
+                        s2 = (s * 2).astype(np.int16)
                         out.append((10_000_000 + i, wav_encode(s2, 1000)))
                 yield pd.DataFrame(out, columns=["audio_id", "content"])
 
@@ -1328,7 +1297,7 @@ def audio_fp_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None
     corpus = gen("base", n_corpus, None)
     batch = gen("gain", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_fp_smoke_")
+    root = scratch_dir("dwh_audio_fp_smoke_")
     t = time.perf_counter()
     audio_fp_frame(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1372,8 +1341,6 @@ def video_phash_ingest_smoke(
     grids come from one md5 digest per frame (64 of its 128 bits fill
     the 8x8 cells) so fixture generation stays decode-dominated, not
     hash-dominated."""
-    import tempfile
-
     from dwh_spark.multimodal.perceptual import (
         video_dhash_frames,
         video_perceptual_incremental_ingest,
@@ -1421,7 +1388,7 @@ def video_phash_ingest_smoke(
     corpus = gen("base", n_corpus, None)
     batch = gen("reenc", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_phash_smoke_")
+    root = scratch_dir("dwh_video_phash_smoke_")
     t = time.perf_counter()
     video_dhash_frames(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1463,8 +1430,6 @@ def audio_offset_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> 
     Planted batch: HEAD-TRIMMED copies (8 windows cut) — the copy
     class the whole-clip hash misses entirely; every batch clip must
     match its base at offset 8."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         audio_offset_near_dup_pairs,
         audio_offset_vote_probe,
@@ -1478,33 +1443,19 @@ def audio_offset_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> 
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
-            import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
-
-            j = np.arange(64, dtype=np.int64)
-
-            def clip(d: int) -> "np.ndarray":
-                wins = []
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
 
             for pdf in batches:
                 out = []
                 for i in pdf["id"]:
                     i = int(i)
                     if which == "base":
-                        out.append((i, wav_encode(clip(i), 1000)))
+                        s = md5_clip(f"{i}", range(57))
+                        out.append((i, wav_encode(s, 1000)))
                     else:
-                        trimmed = clip(base_of(i))[8 * 64:]
+                        trimmed = md5_clip(f"{base_of(i)}", range(8, 57))
                         out.append((10_000_000 + i, wav_encode(trimmed, 1000)))
                 yield pd.DataFrame(out, columns=["audio_id", "content"])
 
@@ -1513,7 +1464,7 @@ def audio_offset_ingest_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> 
     corpus = gen("base", n_corpus, None)
     batch = gen("trim", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_smoke_")
+    root = scratch_dir("dwh_audio_offset_smoke_")
     t = time.perf_counter()
     audio_subfingerprint_frame(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1563,8 +1514,6 @@ def audio_snippet_smoke(n_corpus: int = 100_000, n_queries: int = 200) -> None:
     pair vote. Planted queries: windows [k, k+40) of a random base
     clip, k per query — every snippet must identify its base at
     offset k (found == planted asserted)."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         audio_offset_near_dup_pairs,
         audio_offset_vote_probe,
@@ -1578,34 +1527,20 @@ def audio_snippet_smoke(n_corpus: int = 100_000, n_queries: int = 200) -> None:
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
-            import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
-
-            j = np.arange(64, dtype=np.int64)
-
-            def clip(d: int) -> "np.ndarray":
-                wins = []
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
 
             for pdf in batches:
                 out = []
                 for i in pdf["id"]:
                     i = int(i)
                     if which == "base":
-                        out.append((i, wav_encode(clip(i), 1000)))
+                        s = md5_clip(f"{i}", range(57))
+                        out.append((i, wav_encode(s, 1000)))
                     else:
                         k = start_of(i)
-                        snip = clip(base_of(i))[k * 64: (k + 40) * 64]
+                        snip = md5_clip(f"{base_of(i)}", range(k, k + 40))
                         out.append((10_000_000 + i, wav_encode(snip, 1000)))
                 yield pd.DataFrame(out, columns=["audio_id", "content"])
 
@@ -1615,7 +1550,7 @@ def audio_snippet_smoke(n_corpus: int = 100_000, n_queries: int = 200) -> None:
     start_of = lambda i: (i * 7) % 17  # noqa: E731 — snippet start window
     queries = gen("snip", n_queries, lambda i: (i * 97) % n_corpus, start_of)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_snippet_smoke_")
+    root = scratch_dir("dwh_audio_snippet_smoke_")
     t = time.perf_counter()
     audio_subfingerprint_frame(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1673,8 +1608,6 @@ def video_snippet_smoke(
     base video — every excerpt must identify its base at offset k
     (found == planted asserted). Naive alternative re-decodes all 2M
     corpus frames per query set."""
-    import tempfile
-
     from dwh_spark.multimodal.perceptual import (
         video_dhash_frames,
         video_offset_near_dups,
@@ -1730,7 +1663,7 @@ def video_snippet_smoke(
     start_of = lambda i: (i * 3) % (n_frames - 4)  # noqa: E731
     queries = gen("snip", n_queries, lambda i: (i * 97) % n_corpus, start_of)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_snippet_smoke_")
+    root = scratch_dir("dwh_video_snippet_smoke_")
     t = time.perf_counter()
     video_dhash_frames(corpus).write.parquet(root + "/index")
     build_s = time.perf_counter() - t
@@ -1789,8 +1722,6 @@ def audio_hot_guard_smoke(n_corpus: int = 20_000, n_batch: int = 200) -> None:
     materializes that bucket. Planted batch: head-trimmed copies that
     must still match at offset 8 through their content words — capped
     found == planted asserted."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         attach_subfp_df,
         audio_offset_vote_probe,
@@ -1804,25 +1735,15 @@ def audio_hot_guard_smoke(n_corpus: int = 20_000, n_batch: int = 200) -> None:
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
             import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
 
-            j = np.arange(64, dtype=np.int64)
-            sil = np.zeros(48 * 64, dtype=np.int64)
+            sil = np.zeros(48 * 64, dtype=np.int16)
 
             def clip(d: int) -> "np.ndarray":
-                wins = [sil]
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"hg:{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
+                return np.concatenate([sil, md5_clip(f"hg:{d}", range(57))])
 
             for pdf in batches:
                 out = []
@@ -1840,7 +1761,7 @@ def audio_hot_guard_smoke(n_corpus: int = 20_000, n_batch: int = 200) -> None:
     corpus = gen("base", n_corpus, None)
     batch = gen("trim", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_hot_guard_smoke_")
+    root = scratch_dir("dwh_audio_hot_guard_smoke_")
     t = time.perf_counter()
     attach_subfp_df(audio_subfingerprint_frame(corpus)).write.parquet(
         root + "/index"
@@ -1905,8 +1826,6 @@ def df_maintenance_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None:
     df from scratch with attach_subfp_df (the corpus-wide groupBy +
     join). Both materialize the same updated table (row counts
     asserted equal); the merge's aggregates never see the corpus."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         append_with_df,
         attach_subfp_df,
@@ -1920,40 +1839,25 @@ def df_maintenance_smoke(n_corpus: int = 100_000, n_batch: int = 1_000) -> None:
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
-            import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
-
-            j = np.arange(64, dtype=np.int64)
-
-            def clip(d: int, p: str) -> "np.ndarray":
-                wins = []
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"{p}{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
 
             for pdf in batches:
                 out = []
                 for i in pdf["id"]:
                     i = int(i)
                     if which == "base":
-                        out.append((i, wav_encode(clip(i, "dm:"), 1000)))
+                        s = md5_clip(f"dm:{i}", range(57))
+                        out.append((i, wav_encode(s, 1000)))
                     else:
-                        out.append(
-                            (10_000_000 + i, wav_encode(clip(i, "dmN:"), 1000))
-                        )
+                        s = md5_clip(f"dmN:{i}", range(57))
+                        out.append((10_000_000 + i, wav_encode(s, 1000)))
                 yield pd.DataFrame(out, columns=["audio_id", "content"])
 
         return ids.mapInPandas(run, "audio_id long, content binary")
 
-    root = tempfile.mkdtemp(prefix="dwh_df_maintenance_smoke_")
+    root = scratch_dir("dwh_df_maintenance_smoke_")
     plain = audio_subfingerprint_frame(gen("base", n_corpus))
     plain.write.parquet(root + "/plain")
     plain = spark.read.parquet(root + "/plain")
@@ -2017,8 +1921,6 @@ def video_hot_guard_smoke(n_corpus: int = 10_000, n_batch: int = 200) -> None:
     df (black = 4 x corpus = 40k here, two orders above); 500 splits
     them cleanly. Production picks it off the stored stats table's
     quantiles — the table doubles as the calibration artifact."""
-    import tempfile
-
     from dwh_spark.multimodal.perceptual import (
         video_block_df,
         video_dhash_frames,
@@ -2072,7 +1974,7 @@ def video_hot_guard_smoke(n_corpus: int = 10_000, n_batch: int = 200) -> None:
     corpus = gen("base", n_corpus, None)
     batch = gen("drop", n_batch, lambda i: (i * 97) % n_corpus)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_hot_guard_smoke_")
+    root = scratch_dir("dwh_video_hot_guard_smoke_")
     t = time.perf_counter()
     frames = video_dhash_frames(corpus)
     frames.write.parquet(root + "/index")
@@ -2137,8 +2039,6 @@ def forget_smoke(n_corpus: int = 100_000, n_forget: int = 1_000) -> None:
     ghost subfingerprints probed back hit EXACTLY their surviving
     head-trim copy (planted for each forgotten id) and NEVER the
     forgotten id itself."""
-    import tempfile
-
     from dwh_spark.multimodal.audio_fp import (
         attach_subfp_df,
         audio_offset_vote_probe,
@@ -2153,24 +2053,12 @@ def forget_smoke(n_corpus: int = 100_000, n_forget: int = 1_000) -> None:
         ids = spark.range(n).repartition(64)
 
         def run(batches):
-            import hashlib
-
-            import numpy as np
             import pandas as pd
 
             from dwh_spark.multimodal.audio import wav_encode
 
-            j = np.arange(64, dtype=np.int64)
-
-            def clip(d: int) -> "np.ndarray":
-                wins = []
-                for w in range(57):
-                    a = (
-                        int(hashlib.md5(f"fg:{d}:{w}".encode()).hexdigest()[:4], 16)
-                        % 2048
-                    )
-                    wins.append((a + j * 13) % 2048 - 1024)
-                return np.concatenate(wins).astype(np.int16)
+            def clip(d: int):
+                return md5_clip(f"fg:{d}", range(57))
 
             for pdf in batches:
                 out = []
@@ -2191,7 +2079,7 @@ def forget_smoke(n_corpus: int = 100_000, n_forget: int = 1_000) -> None:
 
         return ids.mapInPandas(run, "audio_id long, content binary")
 
-    root = tempfile.mkdtemp(prefix="dwh_forget_smoke_")
+    root = scratch_dir("dwh_forget_smoke_")
     plain = audio_subfingerprint_frame(gen("base", n_corpus))
     plain.write.parquet(root + "/plain")
     plain = spark.read.parquet(root + "/plain")
@@ -2268,8 +2156,6 @@ def retrain_smoke(n_corpus: int = 200_000, n_forget: int = 1_000) -> None:
     survivors, ZERO forgotten rows survive the rewrite, and a ghost
     re-probe of 200 forgotten vectors finds only their planted
     near-dup family mates, never themselves."""
-    import tempfile
-
     from dwh_spark.operators.forget import forget_rows
     from dwh_spark.operators.similarity import assign_cells, cell_inertia, cell_probe
     from dwh_spark.streaming.emb_ingest import retrain_cells_at_compaction
@@ -2294,7 +2180,7 @@ def retrain_smoke(n_corpus: int = 200_000, n_forget: int = 1_000) -> None:
         .localCheckpoint()
     )
     store = ParquetAppendLog(
-        tempfile.mkdtemp(prefix="dwh_retrain_smoke_") + "/index"
+        scratch_dir("dwh_retrain_smoke_") + "/index"
     )
     t = time.perf_counter()
     store.append(assign_cells(vecs, day0), 0)
@@ -2356,8 +2242,6 @@ def maintenance_window_smoke(n_corpus: int = 200_000, n_forget: int = 1_000) -> 
     preserved), expire the oldest segment, optimize. Verifies: zero
     forgotten rows survive, the expired segment's rows are gone, the
     replay guard is untouched, and the ledger's accounting adds up."""
-    import tempfile
-
     from dwh_spark.operators.similarity import assign_cells
     from dwh_spark.streaming.ingest import ParquetAppendLog
     from dwh_spark.streaming.maintenance import run_maintenance_window
@@ -2381,7 +2265,7 @@ def maintenance_window_smoke(n_corpus: int = 200_000, n_forget: int = 1_000) -> 
         .localCheckpoint()
     )
     store = ParquetAppendLog(
-        tempfile.mkdtemp(prefix="dwh_maint_window_smoke_") + "/index"
+        scratch_dir("dwh_maint_window_smoke_") + "/index"
     )
     t = time.perf_counter()
     n_seg = 4
@@ -2457,8 +2341,6 @@ def fp_window_smoke(n_postings: int = 1_000_000, n_forget: int = 1_000) -> None:
     log equals a full rebuild over the post-window index — the
     stats == rebuild-over-retained exactness the ledger queries pin
     at sf, here at 1M postings."""
-    import tempfile
-
     from dwh_spark.streaming.ingest import ParquetAppendLog
     from dwh_spark.streaming.maintenance import run_fp_maintenance_window
 
@@ -2477,7 +2359,7 @@ def fp_window_smoke(n_postings: int = 1_000_000, n_forget: int = 1_000) -> None:
         )
         .alias("sub32"),
     )
-    root = tempfile.mkdtemp(prefix="dwh_fp_window_smoke_")
+    root = scratch_dir("dwh_fp_window_smoke_")
     index_store = ParquetAppendLog(root + "/index")
     stats_store = ParquetAppendLog(root + "/stats")
     t = time.perf_counter()
@@ -2577,8 +2459,6 @@ def state_lookup_smoke(n_rows: int = 10_000_000, n_files: int = 64) -> None:
     file-open per probe vs thousands. Each side is timed after a warm-up
     run of its own over other keys, so the comparison does not depend on
     which side runs first in the young JVM."""
-    import tempfile
-
     from dwh_spark.streaming.ingest import ParquetStateStore
 
     spark = get_spark("state-lookup-smoke")
@@ -2591,7 +2471,7 @@ def state_lookup_smoke(n_rows: int = 10_000_000, n_files: int = 64) -> None:
         ),
     )
     store = ParquetStateStore(
-        tempfile.mkdtemp(prefix="dwh_state_lookup_smoke_") + "/state",
+        scratch_dir("dwh_state_lookup_smoke_") + "/state",
         range_key="user_id",
         n_files=n_files,
     )
@@ -2683,7 +2563,6 @@ def version_gc_smoke(n_rows: int = 2_000_000, n_versions: int = 8) -> None:
       leaked untouched group or a stale measure changes the count.
     """
     import shutil
-    import tempfile
 
     from dwh_spark.streaming.ingest import (
         ParquetStateStore,
@@ -2692,7 +2571,7 @@ def version_gc_smoke(n_rows: int = 2_000_000, n_versions: int = 8) -> None:
 
     spark = get_spark("version-gc-smoke")
     spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="dwh_version_gc_smoke_") + "/state"
+    root = scratch_dir("dwh_version_gc_smoke_") + "/state"
     store = ParquetStateStore(root)
 
     def state_at(b: int):

@@ -153,6 +153,47 @@ def test_no_new_module_level_caches():
     assert found - _ALLOWED_GLOBALS == set()
 
 
+def _is_doc_id_scan(node: ast.AST) -> bool:
+    """``load_table(..., "documents")[...].select("doc_id")``."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "select"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "doc_id"
+    ):
+        return False
+    recv = node.func.value
+    while isinstance(recv, ast.Call) and isinstance(recv.func, ast.Attribute):
+        recv = recv.func.value
+    return (
+        isinstance(recv, ast.Call)
+        and isinstance(recv.func, ast.Name)
+        and recv.func.id == "load_table"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "documents" for a in recv.args
+        )
+    )
+
+
+def test_no_inline_media_synthesis_in_plans():
+    """Plans synthesize media through dwh_spark/sources/media_fixtures.py
+    (doc_ids, synthesize, md5_clip, md5_grid): no local gen/clip/win/grid
+    function and no hand-rolled doc-id scan of ``documents``."""
+    found = []
+    for path in sorted((REPO / "dwh_spark" / "plans").rglob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef) and node.name in {
+                "gen", "clip", "win", "grid",
+            }:
+                found.append(f"{rel}:{node.lineno} def {node.name}")
+            elif _is_doc_id_scan(node):
+                found.append(f"{rel}:{node.lineno} doc-id scan")
+    assert found == []
+
+
 def test_scratch_dirs_are_removed_when_the_process_exits(tmp_path):
     script = textwrap.dedent(
         f"""
