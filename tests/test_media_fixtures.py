@@ -93,7 +93,7 @@ def _digest(df) -> str:
 @pytest.mark.parametrize("name", sorted(DIGESTS))
 def test_fixture_rows_match_recorded_digest(spark, name):
     builder = getattr(av, name, None) or getattr(images, name)
-    docs = spark.range(40).select(F.col("id").alias("doc_id"))
+    docs = spark.range(0, 40, 1, 1).select(F.col("id").alias("doc_id"))
     flags = {"novel": True} if name in _NOVEL else {}
     assert _digest(builder(docs, True, True, **flags)) == DIGESTS[name]
 
