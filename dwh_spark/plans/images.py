@@ -208,6 +208,45 @@ def imgs_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _decoded_stats(resized: DataFrame) -> DataFrame:
+    """Decode each ``resized`` PNG of a ``decode_and_resize`` output again
+    and report its dims and rounded per-channel means, keyed by
+    ``token_id``: the last stage of every ``imgs_*_pixel_stats`` query.
+    The batch function is named ``verify``, which names the
+    ``MapInPandas verify(...)`` node in the plan."""
+    columns = [
+        "token_id", "format", "target_w", "target_h",
+        "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
+    ]
+
+    def verify(batches):
+        import pandas as pd
+
+        from dwh_spark.multimodal import codecs
+
+        for pdf in batches:
+            rows = []
+            for tok, fmt, tw, th, blob in zip(
+                pdf["token_id"], pdf["format"], pdf["target_w"],
+                pdf["target_h"], pdf["resized"],
+            ):
+                arr = codecs.png_decode(bytes(blob))
+                rows.append((
+                    tok, fmt, int(tw), int(th),
+                    int(arr.shape[1]), int(arr.shape[0]),
+                    int(round(arr[:, :, 0].mean())),
+                    int(round(arr[:, :, 1].mean())),
+                    int(round(arr[:, :, 2].mean())),
+                ))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return resized.mapInPandas(
+        verify,
+        "token_id string, format string, target_w int, target_h int, "
+        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long",
+    )
+
+
 @query(
     "imgs_real_pixel_stats",
     oracle="""
@@ -272,39 +311,7 @@ def imgs_real_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
-    stats_schema = (
-        "token_id string, format string, target_w int, target_h int, "
-        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        from dwh_spark.multimodal import codecs
-
-        for pdf in batches:
-            rows = []
-            for tok, fmt, tw, th, blob in zip(
-                pdf["token_id"], pdf["format"], pdf["target_w"],
-                pdf["target_h"], pdf["resized"],
-            ):
-                arr = codecs.png_decode(bytes(blob))
-                rows.append((
-                    tok, fmt, int(tw), int(th),
-                    int(arr.shape[1]), int(arr.shape[0]),
-                    int(round(arr[:, :, 0].mean())),
-                    int(round(arr[:, :, 1].mean())),
-                    int(round(arr[:, :, 2].mean())),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "token_id", "format", "target_w", "target_h",
-                    "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    verified = resized.mapInPandas(verify, stats_schema)
+    verified = _decoded_stats(resized)
     return verified.select(
         F.col("token_id").cast("long").alias("doc_id"),
         "format",
@@ -371,39 +378,7 @@ def imgs_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
-    stats_schema = (
-        "token_id string, format string, target_w int, target_h int, "
-        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        from dwh_spark.multimodal import codecs
-
-        for pdf in batches:
-            rows = []
-            for tok, fmt, tw, th, blob in zip(
-                pdf["token_id"], pdf["format"], pdf["target_w"],
-                pdf["target_h"], pdf["resized"],
-            ):
-                arr = codecs.png_decode(bytes(blob))
-                rows.append((
-                    tok, fmt, int(tw), int(th),
-                    int(arr.shape[1]), int(arr.shape[0]),
-                    int(round(arr[:, :, 0].mean())),
-                    int(round(arr[:, :, 1].mean())),
-                    int(round(arr[:, :, 2].mean())),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "token_id", "format", "target_w", "target_h",
-                    "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    verified = resized.mapInPandas(verify, stats_schema)
+    verified = _decoded_stats(resized)
     return verified.select(
         F.col("token_id").cast("long").alias("doc_id"),
         "format",
@@ -460,39 +435,7 @@ def imgs_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
-    stats_schema = (
-        "token_id string, format string, target_w int, target_h int, "
-        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        from dwh_spark.multimodal import codecs
-
-        for pdf in batches:
-            rows = []
-            for tok, fmt, tw, th, blob in zip(
-                pdf["token_id"], pdf["format"], pdf["target_w"],
-                pdf["target_h"], pdf["resized"],
-            ):
-                arr = codecs.png_decode(bytes(blob))
-                rows.append((
-                    tok, fmt, int(tw), int(th),
-                    int(arr.shape[1]), int(arr.shape[0]),
-                    int(round(arr[:, :, 0].mean())),
-                    int(round(arr[:, :, 1].mean())),
-                    int(round(arr[:, :, 2].mean())),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "token_id", "format", "target_w", "target_h",
-                    "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    verified = resized.mapInPandas(verify, stats_schema)
+    verified = _decoded_stats(resized)
     return verified.select(
         F.col("token_id").cast("long").alias("doc_id"),
         "format",
@@ -546,39 +489,7 @@ def imgs_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
-    stats_schema = (
-        "token_id string, format string, target_w int, target_h int, "
-        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        from dwh_spark.multimodal import codecs
-
-        for pdf in batches:
-            rows = []
-            for tok, fmt, tw, th, blob in zip(
-                pdf["token_id"], pdf["format"], pdf["target_w"],
-                pdf["target_h"], pdf["resized"],
-            ):
-                arr = codecs.png_decode(bytes(blob))
-                rows.append((
-                    tok, fmt, int(tw), int(th),
-                    int(arr.shape[1]), int(arr.shape[0]),
-                    int(round(arr[:, :, 0].mean())),
-                    int(round(arr[:, :, 1].mean())),
-                    int(round(arr[:, :, 2].mean())),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "token_id", "format", "target_w", "target_h",
-                    "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    verified = resized.mapInPandas(verify, stats_schema)
+    verified = _decoded_stats(resized)
     return verified.select(
         F.col("token_id").cast("long").alias("doc_id"),
         "format",
@@ -649,39 +560,7 @@ def imgs_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanned = resize_fanout(images, resolutions=((40, 30), (16, 12)))
     resized = decode_and_resize(fanned, decoder=pixel_decoder)
 
-    stats_schema = (
-        "token_id string, format string, target_w int, target_h int, "
-        "dec_w int, dec_h int, mean_r long, mean_g long, mean_b long"
-    )
-
-    def verify(batches):
-        import pandas as pd
-
-        from dwh_spark.multimodal import codecs
-
-        for pdf in batches:
-            rows = []
-            for tok, fmt, tw, th, blob in zip(
-                pdf["token_id"], pdf["format"], pdf["target_w"],
-                pdf["target_h"], pdf["resized"],
-            ):
-                arr = codecs.png_decode(bytes(blob))
-                rows.append((
-                    tok, fmt, int(tw), int(th),
-                    int(arr.shape[1]), int(arr.shape[0]),
-                    int(round(arr[:, :, 0].mean())),
-                    int(round(arr[:, :, 1].mean())),
-                    int(round(arr[:, :, 2].mean())),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "token_id", "format", "target_w", "target_h",
-                    "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    verified = resized.mapInPandas(verify, stats_schema)
+    verified = _decoded_stats(resized)
     return verified.select(
         F.col("token_id").cast("long").alias("doc_id"),
         "format",

@@ -1,19 +1,6 @@
-"""SparkSession factory tuned for this engine.
-
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads);
-the same configs are what we would set cluster-side at 100 TB, except
-``shuffle.partitions`` which scales with cluster cores (AQE coalesces
-them down at runtime, so a high static value is safe).
-
-Scale notes (100 TB design):
-- AQE on: runtime partition coalescing, skew-join splitting, and
-  dynamic join-strategy switching replace hand-tuning per query.
-- Arrow on: every Pandas UDF / applyInPandas hop is vectorized.
-- UTC session timezone: deterministic timestamp semantics regardless of
-  host (and required for oracle comparison vs DuckDB's naive UTC).
-- maxRecordsPerBatch capped so wide binary (multimodal) columns don't
-  blow executor memory inside Arrow batches.
-"""
+"""The SparkSession factory tuned for this engine (``get_spark``) and the
+session-lifetime helpers (``persist_slot``, ``session_memo``,
+``scoped_conf``, ``scratch_dir``)."""
 
 from __future__ import annotations
 
@@ -22,7 +9,8 @@ import os
 import shutil
 import tempfile
 import threading
-from typing import Callable, Hashable, TypeVar
+from contextlib import contextmanager
+from typing import Callable, Hashable, Iterator, TypeVar
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +18,51 @@ _T = TypeVar("_T")
 
 
 def get_spark(app_name: str = "dwh-spark", shuffle_partitions: int | None = None) -> SparkSession:
+    """The session every query, test and benchmark runs in.
+
+    Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads);
+    the same configs are what we would set cluster-side at 100 TB, except
+    ``shuffle.partitions`` which scales with cluster cores (AQE coalesces
+    them down at runtime, so a high static value is safe).
+
+    Scale notes (100 TB design), one bullet per conf, what it buys and
+    what it costs:
+    - ``shuffle.partitions`` = cores: buys one reduce task per core; costs
+      oversplit tiny shuffles, which AQE coalesces at runtime.
+    - UTC session timezone: buys timestamp semantics that do not depend on
+      the host (and oracle comparison vs DuckDB's naive UTC); costs nothing.
+    - AQE with partition coalescing and skew-join splitting: buys runtime
+      coalescing, skew splits and join-strategy switching instead of
+      per-query tuning; costs a re-plan at every stage boundary.
+    - Arrow on: buys a vectorized hop for every Pandas UDF and
+      ``applyInPandas``; costs an Arrow conversion at each hop.
+    - ``arrow.maxRecordsPerBatch`` 4096: buys bounded executor memory for
+      wide binary (multimodal) columns inside Arrow batches; costs more
+      batches on narrow columns.
+    - ``autoBroadcastJoinThreshold`` 64 MB: buys shuffle-free joins to
+      dimension tables; costs driver and executor memory per broadcast.
+    - ``driver.memory`` (``$SPARK_GRAFT_DRIVER_MEM``, 16g): buys room for
+      local-mode tasks, which run in the driver JVM; costs that heap.
+    - UI off: buys a driver without the web UI's listeners and state;
+      costs the live UI.
+    - ``files.maxPartitionBytes`` 128 MB: buys scan splits of one parquet
+      row group; costs scan parallelism on files under 128 MB.
+    - ``cleaner.periodicGC.interval`` 2min and
+      ``-XX:+ExplicitGCInvokesConcurrent``: buy prompt cleanup of shuffle
+      files and broadcasts of finished queries; cost a concurrent G1 cycle
+      every 2 minutes (see the comment at the conf).
+    - ``codegen.cache.maxEntries`` (see the comment at the conf): buys a
+      generated-class cache that holds the registry's working set, so a
+      repeated query compiles no class again; costs Metaspace for the kept
+      classes.
+    - ``dataFrameDebugging.enabled`` false: buys ``Column`` and ``F.col``
+      calls without call-site capture (four py4j round trips and a stack
+      walk each); costs the Python ``file:line`` origin in error messages.
+      Errors keep their class and message, so a bad column reference still
+      raises ``AnalysisException`` with its error class. PySpark reads the
+      flag once per Python process, on the first ``Column`` call, so it is
+      set in the builder; set it back to ``true`` here to debug.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -66,6 +99,26 @@ def get_spark(app_name: str = "dwh-spark", shuffle_partitions: int | None = None
             "spark.driver.extraJavaOptions",
             "-XX:+ExplicitGCInvokesConcurrent",
         )
+        # Generated classes live in one JVM-wide Guava cache, split into
+        # segments that each evict at their share of the cap, so Spark's
+        # default of 100 evicts before it holds 100 classes. Working sets
+        # at sf0.001 on local[4], counted by CodegenMetrics compiles:
+        # - the 9 sql_mix queries plus their table warm-up: 99 classes;
+        #   a repeat pass recompiles 30-32 of them at a cap of 100, 0 here.
+        # - the 86 relational, tpch_extra, marketplace and events
+        #   queries: 1,684 compiles in a first pass and 1,505 in a second
+        #   at 100; 1,395 and 1,218 at 1024; 1,393 and 53-95 at 2048, the
+        #   smallest power of two whose second pass recompiles ~5%. The
+        #   rest does not fall with a larger cap (120 at 4096, 89 at
+        #   8192): a few queries compile new classes on every repeat.
+        # - one bench.py pass over the whole registry at sf0.01: 8,105
+        #   compiles at 100, 5,174 here, so it does not fit.
+        # Metaspace after two passes of the 86: 203 MB at 100, 212 MB here.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # Each Column call otherwise captures its Python call site for
+        # error messages: 4 py4j round trips and a stack walk per call,
+        # 187-621 round trips to build one sql_mix query.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 
@@ -125,6 +178,23 @@ def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], _T]) ->
         if k not in _MEMOS.values:
             _MEMOS.values[k] = build()
         return _MEMOS.values[k]
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the ``with`` body, then
+    restore what the session had (unset it if it had no value), also
+    when the body raises, so a failing query leaves no override behind
+    for the next one."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 _scratch_root: str | None = None

@@ -1,8 +1,9 @@
 """Session lifetimes (``dwh_spark/session.py``): a persisted slot keeps
 its frame cached across repeat runs of the same query, ``session_memo``
 builds each key once under concurrent first calls, slots rotate
-independently, scratch dirs go away with the process, and no module
-grows a hand-rolled cache again."""
+independently, a scoped conf is restored when its body raises, scratch
+dirs go away with the process, and no module grows a hand-rolled cache
+or a bare conf pin again."""
 
 from __future__ import annotations
 
@@ -17,12 +18,13 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 import dwh_spark.plans.all  # noqa: F401
 from dwh_spark.plans.registry import QUERIES
-from dwh_spark.session import persist_slot, session_memo
+from dwh_spark.session import persist_slot, scoped_conf, session_memo
 from dwh_spark.sources.catalog import load_table
 
 from tests.conftest import SF_SMALL
@@ -104,6 +106,23 @@ def test_filling_one_slot_leaves_other_slots_persisted(spark):
     finally:
         a2.unpersist()
         b.unpersist()
+
+
+def test_scoped_conf_restores_the_session_value_when_the_body_raises(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(ZeroDivisionError):
+        with scoped_conf(spark, key, "3"):
+            assert spark.conf.get(key) == "3"
+            1 / 0
+    assert spark.conf.get(key) == before
+
+
+def test_scoped_conf_unsets_a_key_the_session_had_not_set(spark):
+    key = f"dwh.test.scoped.{uuid.uuid4().hex}"
+    with scoped_conf(spark, key, "on"):
+        assert spark.conf.get(key) == "on"
+    assert spark.conf.get(key, None) is None
 
 
 # Module-level empty containers that are not per-query caches: the
@@ -191,6 +210,25 @@ def test_no_inline_media_synthesis_in_plans():
                 found.append(f"{rel}:{node.lineno} def {node.name}")
             elif _is_doc_id_scan(node):
                 found.append(f"{rel}:{node.lineno} doc-id scan")
+    assert found == []
+
+
+def test_no_bare_conf_pins_in_plans():
+    """Plans override a session conf through scoped_conf
+    (dwh_spark/session.py), which restores it even when the query
+    fails: no ``<session>.conf.set(...)`` under dwh_spark/plans/."""
+    found = []
+    for path in sorted((REPO / "dwh_spark" / "plans").rglob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            func = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(func, ast.Attribute)
+                and func.attr == "set"
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "conf"
+            ):
+                found.append(f"{rel}:{node.lineno} {ast.unparse(func)}")
     assert found == []
 
 
