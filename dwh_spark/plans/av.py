@@ -1574,7 +1574,7 @@ def av_video_snippet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "av.capped.<family>" and "av.corpus.<family>" (persist_slot): each
 # frame feeds BOTH the stats build and the probe — without the persist
 # the fixture corpus would be decoded twice. One slot per family
-# (audio|video), so the capstone pools (pipeline_extra.py) materialize
+# (audio|video), so the capstones (pipeline_extra.py) materialize
 # the two arms concurrently while storage stays bounded at one live
 # fixture per family and slot.
 

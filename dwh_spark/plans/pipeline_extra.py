@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dwh_spark.plans.registry import query
-from dwh_spark.session import scratch_dir, session_memo
+from dwh_spark.session import run_parallel, scratch_dir, session_memo
 from dwh_spark.sources.catalog import load_table
 
 
@@ -1756,28 +1756,19 @@ def mixed_ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The four modality triages are INDEPENDENT jobs (disjoint inputs,
     # disjoint persist slots), so their localCheckpoint
-    # materializations run from a small thread pool — each family's
-    # tail stragglers back-fill with the next family's tasks instead
-    # of idling the cluster (the marketplace fold's pooled-commit
-    # discipline applied to the capstone). Audio and video have one
-    # slot each, so they never rotate each other's fixture out and
-    # all four arms run concurrently — the AV chain was the pool's
-    # critical path (audio + video back-to-back in one worker).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_audio = pool.submit(
-            lambda: _part("audio", av_audio_corpus_ingest_triage(spark, sf_dir))
-        )
-        f_video = pool.submit(
-            lambda: _part("video", av_video_corpus_ingest_triage(spark, sf_dir))
-        )
-        f_doc = pool.submit(_part, "doc", doc_items)
-        f_img = pool.submit(
-            lambda: _part("image", imgs_corpus_ingest_triage(spark, sf_dir))
-        )
-        doc_part, img_part = f_doc.result(), f_img.result()
-        audio_part, video_part = f_audio.result(), f_video.result()
+    # materializations run in parallel. Audio and video have one slot
+    # each, so they never rotate each other's fixture out and all four
+    # arms run concurrently — the AV chain was the critical path when
+    # audio and video ran back-to-back in one worker.
+    audio_part, video_part, doc_part, img_part = run_parallel(
+        spark,
+        [
+            lambda: _part("audio", av_audio_corpus_ingest_triage(spark, sf_dir)),
+            lambda: _part("video", av_video_corpus_ingest_triage(spark, sf_dir)),
+            lambda: _part("doc", doc_items),
+            lambda: _part("image", imgs_corpus_ingest_triage(spark, sf_dir)),
+        ],
+    )
     manifest = doc_part
     for p in (img_part, audio_part, video_part):
         manifest = manifest.unionByName(p)
@@ -1984,8 +1975,8 @@ def pipeline_unified_erasure_ledger(
     operators/forget.py:44-47), and the ledger is the auditor's
     artifact proving both deletion (zero ghosts) and non-collateral
     (survivors untouched). Each family's tiny aggregate is
-    localCheckpoint-ed and all five families materialize from a
-    small thread pool — the AV probes keep their fixtures in one
+    localCheckpoint-ed and all five families materialize in
+    parallel (``run_parallel``) — the AV probes keep their fixtures in one
     persist slot per family ("av.capped.<family>"), exactly the
     discipline mixed_ingest_manifest documents."""
     from dwh_spark.plans.av import (
@@ -2103,23 +2094,10 @@ def pipeline_unified_erasure_ledger(
     # The five family probes are INDEPENDENT jobs (disjoint forget
     # stores, disjoint persist slots: imgs rotates "images.corpus",
     # docs/emb build fresh scratch dirs, and audio and video have one
-    # slot each) — materialize all five from a small thread pool so
-    # each family's tail back-fills with the next family's tasks (the
-    # mixed_ingest_manifest pool applied to the erasure capstone;
-    # guide §2.6 — this was the one capstone left sequential in r18,
-    # and it showed: mixed gained 1.67x, erasure stayed flat).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_audio = pool.submit(_audio_led)
-        f_video = pool.submit(_video_led)
-        f_doc = pool.submit(_docs_led)
-        f_emb = pool.submit(_emb_led)
-        f_img = pool.submit(_image_led)
-        docs_led, emb_led, image_led = (
-            f_doc.result(), f_emb.result(), f_img.result()
-        )
-        audio_led, video_led = f_audio.result(), f_video.result()
+    # slot each), so they run in parallel.
+    audio_led, video_led, docs_led, emb_led, image_led = run_parallel(
+        spark, [_audio_led, _video_led, _docs_led, _emb_led, _image_led]
+    )
     out = docs_led
     for part in (emb_led, image_led, audio_led, video_led):
         out = out.unionByName(part)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.plans.registry import query
-from dwh_spark.session import scoped_conf, scratch_dir, session_memo
+from dwh_spark.session import run_parallel, scoped_conf, scratch_dir, session_memo
 from dwh_spark.sources.catalog import load_table
 from dwh_spark.sources.media_fixtures import doc_ids
 from dwh_spark.streaming.ingest import (
@@ -1389,18 +1389,13 @@ def streaming_minhash_ttl_compact_ingest(
         # OPTIMIZE runs first, then the horizon advances: the merged
         # [0,1] segment straddles keep_from=1 and survives whole.
         # The two content-preserving compactions rewrite disjoint
-        # stores with no cross-store reads — overlapped (guide §2.6);
+        # stores with no cross-store reads, so they run in parallel;
         # the O(manifest) expires stay sequential after both.
         if batch_id == 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(bands_store.compact, spark),
-                    pool.submit(docs_store.compact, spark),
-                ]
-                for f in futs:
-                    f.result()
+            run_parallel(
+                spark,
+                [lambda: bands_store.compact(spark), lambda: docs_store.compact(spark)],
+            )
             bands_store.expire(keep_from=1)
             docs_store.expire(keep_from=1)
 

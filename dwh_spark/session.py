@@ -1,6 +1,7 @@
-"""The SparkSession factory tuned for this engine (``get_spark``) and the
+"""The SparkSession factory tuned for this engine (``get_spark``), the
 session-lifetime helpers (``persist_slot``, ``session_memo``,
-``scoped_conf``, ``scratch_dir``)."""
+``scoped_conf``, ``scratch_dir``) and the one thread pool
+(``run_parallel``)."""
 
 from __future__ import annotations
 
@@ -9,9 +10,11 @@ import os
 import shutil
 import tempfile
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from typing import Callable, Hashable, Iterator, TypeVar
+from typing import Callable, Hashable, Iterator, Sequence, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 _T = TypeVar("_T")
@@ -213,3 +216,30 @@ def scratch_dir(prefix: str) -> str:
             _scratch_root = tempfile.mkdtemp(prefix="dwh_scratch_")
             atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+
+
+def run_parallel(spark: SparkSession, fns: Sequence[Callable[[], _T]]) -> list[_T]:
+    """Call each of ``fns`` (independent Spark jobs: disjoint stores or
+    read-only scans) and return their results in list order.
+
+    The fns overlap so that one job's straggler tail back-fills with the
+    next job's tasks. They share the session's task slots, so threads
+    past ``defaultParallelism`` add no capacity: the pool has
+    ``min(len(fns), defaultParallelism)`` workers. With one worker the
+    fns run in order on the caller's thread, and the first error stops
+    them. A pooled fn is wrapped in ``inheritable_thread_target(spark)``
+    on the caller's thread, so its jobs carry the caller's local
+    properties (job group, scheduler pool, SQL execution id) and tags,
+    each fn in its own copy; every pooled fn runs to its end before the
+    first error in list order is raised. Either way a caller that
+    commits after the call (a manifest swap, a pointer flip) never
+    commits beside a half-written sibling.
+    """
+    fns = list(fns)
+    workers = min(len(fns), spark.sparkContext.defaultParallelism)
+    if workers <= 1:
+        return [fn() for fn in fns]
+    wrapped = [inheritable_thread_target(spark)(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(fn) for fn in wrapped]
+    return [f.result() for f in futures]

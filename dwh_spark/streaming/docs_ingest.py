@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.operators.dedup import band_index, candidate_corpus_shingles, shingles
+from dwh_spark.session import run_parallel
 from dwh_spark.streaming.ingest import ParquetAppendLog
 
 
@@ -138,16 +139,14 @@ def run_minhash_ingest(
                 os.path.join(out_dir, f"batch={batch_id}")
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write_out),
-                pool.submit(bands_store.write_segment, batch_bands, batch_id),
-                pool.submit(docs_store.write_segment, batch_df, batch_id),
-            ]
-            for f in futs:
-                f.result()
+        run_parallel(
+            spark,
+            [
+                _write_out,
+                lambda: bands_store.write_segment(batch_bands, batch_id),
+                lambda: docs_store.write_segment(batch_df, batch_id),
+            ],
+        )
         # append-only: each batch persists O(batch) rows — history
         # is never rewritten (the snapshot store would rewrite the
         # whole union per batch, quadratic in corpus size)

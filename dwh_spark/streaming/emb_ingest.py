@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.operators.similarity import assign_cells, cell_probe
+from dwh_spark.session import run_parallel
 from dwh_spark.streaming.ingest import ParquetAppendLog
 
 
@@ -111,15 +112,10 @@ def run_semantic_ingest(
                 os.path.join(out_dir, f"batch={batch_id}")
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(_write_out),
-                pool.submit(index_store.write_segment, batch_cells, batch_id),
-            ]
-            for f in futs:
-                f.result()
+        run_parallel(
+            spark,
+            [_write_out, lambda: index_store.write_segment(batch_cells, batch_id)],
+        )
         # append-only: O(batch) index rows per ingest, history never
         # rewritten; the manifest swap is the completion marker
         index_store.commit_segment(batch_id)

@@ -31,11 +31,13 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.operators.latest_state import latest_state_agg
+from dwh_spark.session import run_parallel
 
 
 def spread_small_batch(df: DataFrame) -> DataFrame:
@@ -62,27 +64,22 @@ def spread_small_batch(df: DataFrame) -> DataFrame:
 
 def append_batches(jobs) -> None:
     """Stage several INDEPENDENT appends — ``jobs`` is a list of
-    ``(store, df, batch_id)`` — with every segment write (the Spark
-    job) running from a small thread pool and every manifest commit
-    (a cheap atomic swap) landing afterwards, in list order.
+    ``(store, df, batch_id)`` — with the segment writes (the Spark
+    jobs) running in parallel and every manifest commit (a cheap
+    atomic swap) landing afterwards, in list order.
 
-    This is the guide-§2.6 overlap applied to fixture/window staging
-    loops: N sequential ``append`` calls serialize N independent jobs
-    purely because the driver calls them sequentially; pooling lets
-    one write's straggler tail back-fill with the next write's tasks.
+    N sequential ``append`` calls would serialize N independent jobs
+    purely because the driver calls them sequentially.
     Commit-after-all-writes keeps the same all-or-visible discipline
     the folds use (an uncommitted segment dir is invisible to every
-    reader; a crashed staging loop is simply re-run)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    reader; a crashed staging loop is simply re-run): if any write
+    raises, no store commits."""
     jobs = list(jobs)
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as pool:
-        futs = [
-            pool.submit(store.write_segment, df, batch_id)
-            for store, df, batch_id in jobs
-        ]
-        for f in futs:
-            f.result()
+    if jobs:
+        run_parallel(
+            jobs[0][1].sparkSession,
+            [partial(store.write_segment, df, b) for store, df, b in jobs],
+        )
     for store, _, batch_id in jobs:
         store.commit_segment(batch_id)
 
@@ -1204,12 +1201,11 @@ class ParquetAppendLog:
         gen = man.get("gen", 0) + 1
 
         # the per-segment rewrites are independent jobs into disjoint
-        # fresh-generation dirs, so they run from a small thread pool
-        # (guide §2.6 back-fill: one segment's write tail overlaps the
-        # next one's plan+scan); the manifest still swaps atomically
-        # ONCE after every write has landed, so readers and crash
-        # semantics are exactly the sequential form's — a crash
-        # mid-pool leaves only unreferenced new-gen dirs for _gc
+        # fresh-generation dirs, so they run in parallel; the manifest
+        # still swaps atomically ONCE after every write has landed, so
+        # readers and crash semantics are exactly the sequential
+        # form's — a crash mid-rewrite leaves only unreferenced new-gen
+        # dirs for _gc
         def _rewrite_one(i: int, s: str) -> tuple[str, list[int]]:
             lo, hi = self._range(man, s)
             name = f"rw{lo:010d}_{hi:010d}g{gen}i{i}"
@@ -1219,16 +1215,10 @@ class ParquetAppendLog:
             self._write_segment(df, name)
             return name, [lo, hi]
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(man["segments"]))
-        ) as pool:
-            done = list(
-                pool.map(
-                    lambda t: _rewrite_one(*t), enumerate(man["segments"])
-                )
-            )
+        done = run_parallel(
+            spark,
+            [partial(_rewrite_one, i, s) for i, s in enumerate(man["segments"])],
+        )
         new_segments = [name for name, _ in done]
         new_ranges = {name: rng for name, rng in done}
         new_man = {

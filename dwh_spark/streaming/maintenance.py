@@ -77,6 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_spark.operators.caps import calibrate_cap
+from dwh_spark.session import run_parallel
 from dwh_spark.streaming.ingest import ParquetAppendLog, _read_store_parquet
 
 
@@ -585,22 +586,22 @@ def run_fp_maintenance_window(
     # the post-window report reads TWO disjoint stores: the postings
     # count scans the (possibly large) index while the hot-word set
     # and scalars aggregate the bounded stats log — independent
-    # read-only jobs, so the index count runs concurrently and the
-    # stats jobs back-fill its tail (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # read-only jobs, so the stats jobs back-fill the count's tail
     cur = index_store.current(spark)
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        f_npost = _pool.submit(
-            lambda: int(cur.count()) if cur is not None else 0
-        )
+
+    def _stats_report() -> tuple:
         stats_post = merged(stats_store.current(spark)).localCheckpoint()
         hot_rows = stats_post.filter(F.col("df") > cap).collect()
         # one bounded aggregate for both report scalars (was two jobs)
         post_row = stats_post.agg(
             F.max("df").alias("mx"), F.count("*").alias("n")
         ).collect()[0]
-        n_postings_after = f_npost.result()
+        return hot_rows, post_row
+
+    n_postings_after, (hot_rows, post_row) = run_parallel(
+        spark,
+        [lambda: int(cur.count()) if cur is not None else 0, _stats_report],
+    )
     max_df_row = post_row["mx"]
     n_words_after = int(post_row["n"])
     man = index_store._read_manifest()
@@ -774,29 +775,26 @@ def run_two_store_window(
         else:
             if report_counts:
                 # the two erasure-receipt scans read DIFFERENT stores —
-                # independent read-only jobs, overlapped (guide §2.6);
-                # both land before any rewrite moves, as before
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as _pool:
-                    f_icount = _pool.submit(
+                # independent read-only jobs; both land before any
+                # rewrite moves
+                index_rows_forgotten, pstats = run_parallel(
+                    spark,
+                    [
                         lambda: int(
                             index_state.join(
                                 F.broadcast(forgotten_ids), key, "left_semi"
                             ).count()
-                        )
-                    )
-                    pstats = (
-                        payload_state.join(
+                        ),
+                        lambda: payload_state.join(
                             F.broadcast(forgotten_ids), key, "left_semi"
                         )
                         .agg(
                             F.count("*").alias("n"),
                             F.coalesce(F.sum(key), F.lit(0)).alias("key_sum"),
                         )
-                        .collect()[0]
-                    )
-                    index_rows_forgotten = f_icount.result()
+                        .collect()[0],
+                    ],
+                )
                 payload_rows_forgotten = int(pstats["n"])
                 forgotten_key_sum = int(pstats["key_sum"])
             else:
@@ -839,51 +837,40 @@ def run_two_store_window(
     # manifest swap stays atomic; the index-first ORDER contract
     # governs removals — forget and expire — not the optimize pass,
     # where either crash window leaves both stores fully consistent),
-    # so they overlap (guide §2.6): each is a full-store read+write
-    # whose straggler tail the other back-fills.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # so they run in parallel: each is a full-store read+write whose
+    # straggler tail the other back-fills.
     if optimize:
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            f_i = _pool.submit(index_store.compact, spark)
-            f_p = _pool.submit(payload_store.compact, spark)
-            f_i.result(), f_p.result()
+        run_parallel(
+            spark,
+            [lambda: index_store.compact(spark), lambda: payload_store.compact(spark)],
+        )
 
     # -- phase 4: the cross-store referential audit — up to four
-    # independent read-only jobs over the two live stores, pooled
+    # independent read-only jobs over the two live stores
     icur = index_store.current(spark)
     pcur = payload_store.current(spark)
     audit_jobs: dict = {}
-    with ThreadPoolExecutor(max_workers=4) as _pool:
-        if report_counts:
-            if icur is not None:
-                audit_jobs["i_after"] = _pool.submit(lambda: int(icur.count()))
-            if pcur is not None:
-                audit_jobs["p_after"] = _pool.submit(lambda: int(pcur.count()))
-        if audit_consistency and icur is not None and pcur is not None:
-            audit_jobs["orphan_i"] = _pool.submit(
-                lambda: int(
-                    icur.join(pcur.select(key), key, "left_anti")
-                    .select(key).distinct().count()
-                )
-            )
-            audit_jobs["orphan_p"] = _pool.submit(
-                lambda: int(
-                    pcur.join(icur.select(key), key, "left_anti")
-                    .select(key).distinct().count()
-                )
-            )
-        elif audit_consistency:
-            # one side fully empty: every key on the other side dangles
-            if icur is not None:
-                audit_jobs["orphan_i"] = _pool.submit(
-                    lambda: int(icur.select(key).distinct().count())
-                )
-            if pcur is not None:
-                audit_jobs["orphan_p"] = _pool.submit(
-                    lambda: int(pcur.select(key).distinct().count())
-                )
-        resolved = {k: f.result() for k, f in audit_jobs.items()}
+    if report_counts:
+        if icur is not None:
+            audit_jobs["i_after"] = lambda: int(icur.count())
+        if pcur is not None:
+            audit_jobs["p_after"] = lambda: int(pcur.count())
+    if audit_consistency and icur is not None and pcur is not None:
+        audit_jobs["orphan_i"] = lambda: int(
+            icur.join(pcur.select(key), key, "left_anti")
+            .select(key).distinct().count()
+        )
+        audit_jobs["orphan_p"] = lambda: int(
+            pcur.join(icur.select(key), key, "left_anti")
+            .select(key).distinct().count()
+        )
+    elif audit_consistency:
+        # one side fully empty: every key on the other side dangles
+        if icur is not None:
+            audit_jobs["orphan_i"] = lambda: int(icur.select(key).distinct().count())
+        if pcur is not None:
+            audit_jobs["orphan_p"] = lambda: int(pcur.select(key).distinct().count())
+    resolved = dict(zip(audit_jobs, run_parallel(spark, list(audit_jobs.values()))))
     if report_counts:
         index_rows_after = resolved.get("i_after", 0)
         payload_rows_after = resolved.get("p_after", 0)

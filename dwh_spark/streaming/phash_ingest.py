@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from dwh_spark.multimodal.audio_fp import AUDIO_FP_BITS, audio_fp_frame
 from dwh_spark.multimodal.perceptual import DHASH_BITS, dhash_frame
 from dwh_spark.operators.dedup import simhash_blocked_pairs, simhash_blocked_probe
+from dwh_spark.session import run_parallel
 from dwh_spark.streaming.ingest import ParquetAppendLog, _read_store_parquet
 
 
@@ -110,15 +111,9 @@ def _run_indexed_ingest(
                 os.path.join(out_dir, f"batch={batch_id}")
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(_write_out),
-                pool.submit(index_store.write_segment, batch_fps, batch_id),
-            ]
-            for f in futs:
-                f.result()
+        run_parallel(
+            spark, [_write_out, lambda: index_store.write_segment(batch_fps, batch_id)]
+        )
         # append-only: O(batch) fingerprint rows, history never
         # rewritten; the manifest swap is the completion marker
         index_store.commit_segment(batch_id)
@@ -860,23 +855,20 @@ class BlockDfCapMaintenance:
         if self.compact_every is not None and (
             (batch_id + 1) % self.compact_every == 0
         ):
-            # disjoint-store rewrites with no cross-store reads —
-            # overlapped (guide §2.6); each manifest swap stays atomic
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(self.index_store.compact, self.spark),
-                    pool.submit(
-                        self.stats_store.compact,
+            # disjoint-store rewrites with no cross-store reads, so
+            # they run in parallel; each manifest swap stays atomic
+            run_parallel(
+                self.spark,
+                [
+                    lambda: self.index_store.compact(self.spark),
+                    lambda: self.stats_store.compact(
                         self.spark,
                         transform=lambda df: df.groupBy("i", "val").agg(
                             F.sum("df").alias("df")
                         ),
                     ),
-                ]
-                for f in futs:
-                    f.result()
+                ],
+            )
 
 
 def run_video_offset_cap_ingest(

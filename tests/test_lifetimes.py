@@ -1,9 +1,10 @@
 """Session lifetimes (``dwh_spark/session.py``): a persisted slot keeps
 its frame cached across repeat runs of the same query, ``session_memo``
 builds each key once under concurrent first calls, slots rotate
-independently, a scoped conf is restored when its body raises, scratch
-dirs go away with the process, and no module grows a hand-rolled cache
-or a bare conf pin again."""
+independently, a scoped conf is restored when its body raises,
+``run_parallel`` keeps list order and the caller's job group, scratch
+dirs go away with the process, and no module grows a hand-rolled cache,
+a bare conf pin or a thread pool of its own again."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
 
 import pytest
 from pyspark import StorageLevel
@@ -24,10 +26,10 @@ from pyspark.sql import functions as F
 
 import dwh_spark.plans.all  # noqa: F401
 from dwh_spark.plans.registry import QUERIES
-from dwh_spark.session import persist_slot, scoped_conf, session_memo
+from dwh_spark.session import persist_slot, run_parallel, scoped_conf, session_memo
 from dwh_spark.sources.catalog import load_table
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, n_jobs
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -123,6 +125,48 @@ def test_scoped_conf_unsets_a_key_the_session_had_not_set(spark):
     with scoped_conf(spark, key, "on"):
         assert spark.conf.get(key) == "on"
     assert spark.conf.get(key, None) is None
+
+
+def test_run_parallel_returns_results_in_list_order(spark):
+    # the first fn ends last, so completion order is the reverse
+    fns = [lambda i=i: (time.sleep(0.05 * (3 - i)), i)[1] for i in range(4)]
+    assert run_parallel(spark, fns) == [0, 1, 2, 3]
+
+
+def test_run_parallel_raises_the_first_error_after_every_fn_ends(spark):
+    finished = []
+
+    def fail(message):
+        raise ValueError(message)
+
+    def slow():
+        time.sleep(0.3)
+        finished.append("slow")
+
+    with pytest.raises(ValueError, match="first"):
+        run_parallel(spark, [slow, lambda: fail("first"), lambda: fail("second")])
+    assert finished == ["slow"]
+
+
+def test_run_parallel_jobs_keep_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    group = f"test.run_parallel.{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run_parallel(
+            spark, [lambda: sc.parallelize(range(8), 2).count() for _ in range(4)]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs(spark, group) == 4
+
+
+def test_run_parallel_without_a_pool_runs_on_the_callers_thread(spark):
+    caller = threading.get_ident()
+    assert run_parallel(spark, [threading.get_ident]) == [caller]
+    one_core = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=1))
+    assert run_parallel(one_core, [threading.get_ident] * 3) == [caller] * 3
+    assert run_parallel(spark, []) == []
 
 
 # Module-level empty containers that are not per-query caches: the
@@ -230,6 +274,75 @@ def test_no_bare_conf_pins_in_plans():
             ):
                 found.append(f"{rel}:{node.lineno} {ast.unparse(func)}")
     assert found == []
+
+
+def _thread_pool_uses(tree: ast.AST) -> list[tuple[int, str]]:
+    """Imports or uses of ``concurrent.futures`` and its executors, and
+    ``threading.Thread`` calls or imports, in one module's syntax tree."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names if a.name.startswith("concurrent")]
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            names = [
+                f"{mod}.{a.name}"
+                for a in node.names
+                if mod.startswith("concurrent")
+                or (mod == "threading" and a.name == "Thread")
+            ]
+        elif isinstance(node, (ast.Name, ast.Attribute)):
+            name = node.id if isinstance(node, ast.Name) else node.attr
+            names = [name] if name.endswith("PoolExecutor") else []
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "Thread"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "threading"
+            ):
+                names.append("threading.Thread")
+        else:
+            continue
+        found += [(node.lineno, n) for n in names]
+    return found
+
+
+def test_no_thread_pools_outside_session():
+    """Independent Spark jobs run through run_parallel
+    (dwh_spark/session.py), which sizes its pool from the session and
+    carries the caller's job group into every job: no other module
+    under dwh_spark/ imports concurrent.futures, names an executor or
+    starts a threading.Thread."""
+    found = []
+    for path in sorted((REPO / "dwh_spark").rglob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        if rel != "dwh_spark/session.py":
+            found += [
+                f"{rel}:{line} {name}"
+                for line, name in _thread_pool_uses(ast.parse(path.read_text()))
+            ]
+    assert found == []
+
+
+def test_thread_pool_guard_flags_each_form():
+    planted = textwrap.dedent(
+        """
+        import concurrent.futures
+        from concurrent.futures import ThreadPoolExecutor
+        from threading import Thread
+        import threading
+        pool = concurrent.futures.ThreadPoolExecutor(2)
+        threading.Thread(target=print).start()
+        lock = threading.Lock()
+        """
+    )
+    assert sorted(_thread_pool_uses(ast.parse(planted))) == [
+        (2, "concurrent.futures"),
+        (3, "concurrent.futures.ThreadPoolExecutor"),
+        (4, "threading.Thread"),
+        (6, "ThreadPoolExecutor"),
+        (7, "threading.Thread"),
+    ]
 
 
 def test_scratch_dirs_are_removed_when_the_process_exits(tmp_path):

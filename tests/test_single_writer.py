@@ -6,6 +6,8 @@ detection, not a lock — these tests pin that the realistic race (a
 second writer landing during this writer's long Spark job) is caught.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,7 @@ from dwh_spark.streaming.ingest import (
     ConcurrentWriterError,
     ParquetAppendLog,
     ParquetStateStore,
+    append_batches,
 )
 
 
@@ -85,6 +88,33 @@ def test_append_log_normal_single_writer_never_raises(spark, tmp_path):
     assert log.current(spark).count() == 18 + 10
     # one bump per mutation, starting at 0 for the first append
     assert log._txn(log._read_manifest()) == 6
+
+
+def test_append_batches_commits_no_store_when_one_write_fails(spark, tmp_path):
+    """The segment writes run in parallel and every manifest commit
+    comes after all of them: one failed write raises only once the
+    other writes have landed, and no store's manifest moves."""
+    logs = [
+        ParquetAppendLog(str(tmp_path / f"log{i}"), write_partitions=1)
+        for i in range(3)
+    ]
+    for log in logs:
+        log.append(_frame(spark, 0, 5), 0)
+
+    def fail(df, batch_id):
+        raise OSError("segment write failed")
+
+    logs[-1].write_segment = fail  # fails at once, while the others write
+    with pytest.raises(OSError, match="segment write failed"):
+        append_batches(
+            [(log, _frame(spark, 10 * i, 10 * i + 7), 1) for i, log in enumerate(logs)]
+        )
+    assert [log.last_committed() for log in logs] == [0, 0, 0]
+    assert not os.path.exists(logs[-1].segment_dir(1))
+    for log in logs[:-1]:
+        assert os.path.exists(os.path.join(log.segment_dir(1), "_SUCCESS"))
+        assert spark.read.parquet(log.segment_dir(1)).count() == 7
+        assert {r["x"] for r in log.current(spark).collect()} == set(range(5))
 
 
 def test_state_store_flip_detects_second_writer(spark, tmp_path):
